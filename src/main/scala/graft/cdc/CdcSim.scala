@@ -1,7 +1,5 @@
 package graft.cdc
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -61,23 +59,23 @@ object CdcSim {
 
   private val nullRow: Column = lit(null).cast(ordersRow)
 
-  /** Memoized, persisted envelope streams per source path — the
-    * synthesized stream plays the role of the Kafka topic (S2): it
-    * exists once, independent of how many pipelines consume it, so
-    * queries must not pay the synthesis cost repeatedly. Cached on
-    * first materialization. */
-  private val envelopeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** `plan` landed in the artifact store ([[graft.sim.IndexCache]])
+    * under `<key>:<cacheKey>`, persisted and counted eagerly like the
+    * reference's MV. A hit builds no plan: the session is the active
+    * one, and `plan` is only built on a miss or when no session is
+    * active. */
+  private def landed(key: String, cacheKey: String, plan: => DataFrame): DataFrame = {
+    lazy val built = plan
+    val spark = SparkSession.getActiveSession.getOrElse(built.sparkSession)
+    graft.sim.IndexCache.getOrBuild(spark, s"$key:$cacheKey")(built)
+  }
 
-  /** Cached variant of [[orderEnvelopes]] keyed by a caller-chosen
-    * cache key (typically the sf dir). */
+  /** The synthesized envelope stream per source (typically the sf dir)
+    * — it plays the role of the Kafka topic (S2): it exists once,
+    * independent of how many pipelines consume it, so queries must not
+    * pay the synthesis cost repeatedly. */
   def orderEnvelopesCached(cacheKey: String, orders: => DataFrame): DataFrame =
-    envelopeCache.computeIfAbsent(cacheKey, _ => {
-      val env = orderEnvelopes(orders)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      env.count() // materialize eagerly so consumers see a warm topic
-      env
-    })
+    landed("cdc-envelopes", cacheKey, orderEnvelopes(orders))
 
   /** One envelope-JSON event stream: columns (key, value) of JSON
     * strings, exactly as a Kafka consumer would see them (S2). */
@@ -135,9 +133,6 @@ object CdcSim {
     latest.where(!col("__deleted"))
   }
 
-  private val decodedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Landed decoded-envelope layer per cache key: the full `_env`
     * struct (before / after / source / op / ts_ms / transaction),
     * Jackson paid ONCE at ingest — the analog of the reference's
@@ -145,26 +140,12 @@ object CdcSim {
     * variants, SCD2 history, op accounting, current state) is then pure
     * column ops over this artifact instead of a per-query JSON parse
     * (q62 measured 1.2 s/query re-decoding at sf0.1; the unwrap off
-    * this layer is ~0.1 s). Same session-scoped keying rules as
-    * [[currentStateCached]]. */
-  def decodedEnvelopesCached(cacheKey: String, rawEnvelopes: => DataFrame): DataFrame = {
-    decodedCache.entrySet().removeIf(e => e.getValue.sparkSession.sparkContext.isStopped)
-    // only the decoded struct is landed — carrying the raw JSON strings
-    // through the persist would double the artifact for no consumer
-    lazy val built = EnvelopeDecode.decode(rawEnvelopes, ordersRow)
-      .select(col("_env"))
-    val appId = SparkSession.getActiveSession
-      .map(_.sparkContext.applicationId)
-      .getOrElse(built.sparkSession.sparkContext.applicationId)
-    decodedCache.computeIfAbsent(s"$appId:$cacheKey", _ => {
-      val persisted = built.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persisted.count() // land eagerly, like the reference's landing MV
-      persisted
-    })
-  }
-
-  private val stateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * this layer is ~0.1 s). Only the decoded struct is landed — carrying
+    * the raw JSON strings through the persist would double the artifact
+    * for no consumer. */
+  def decodedEnvelopesCached(cacheKey: String, rawEnvelopes: => DataFrame): DataFrame =
+    landed("cdc-decoded", cacheKey,
+      EnvelopeDecode.decode(rawEnvelopes, ordersRow).select(col("_env")))
 
   /** Materialized [[currentState]] per cache key — the analog of the
     * reference's ReplacingMergeTree TABLE: ClickHouse pays the envelope
@@ -172,39 +153,9 @@ object CdcSim {
     * query reads the landed table. Re-running the JSON decode per
     * analytical query would charge the ingest cost to every reader —
     * the exact pattern the reference's MV → table split exists to
-    * avoid.
-    *
-    * A cached plan is bound to the SparkSession that built it, so the
-    * internal key includes the owning context: a session restart in the
-    * same JVM (tests) recomputes instead of serving a frame whose
-    * context is stopped, and entries from dead contexts are dropped
-    * (their persisted blocks died with the context). */
-  def currentStateCached(cacheKey: String, rawEnvelopes: => DataFrame): DataFrame = {
-    stateCache.entrySet().removeIf(e => e.getValue.sparkSession.sparkContext.isStopped)
-    // resolve the context WITHOUT building the decode plan: a cache hit
-    // must cost nothing (the whole point of the MV→table split); the
-    // plan is only constructed on a miss, or when no session is active.
-    // Built off the shared decoded layer so warm() pays Jackson once
-    // for ALL change-stream consumers, not once per derived artifact.
-    lazy val built = currentStateFromDecoded(
-      decodedEnvelopesCached(cacheKey, rawEnvelopes))
-    val appId = SparkSession.getActiveSession
-      .map(_.sparkContext.applicationId)
-      .getOrElse(built.sparkSession.sparkContext.applicationId)
-    stateCache.computeIfAbsent(s"$appId:$cacheKey", _ => {
-      val persisted = built.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persisted.count() // land the table eagerly, like the streaming MV would
-      persisted
-    })
-  }
-
-  /** Drop all cached states + decoded layers, unpersisting live ones
-    * (test hook). */
-  def clearStateCache(): Unit = {
-    (stateCache.values.asScala ++ decodedCache.values.asScala).foreach { df =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    }
-    stateCache.clear()
-    decodedCache.clear()
-  }
+    * avoid. Built off the shared decoded layer, so warm() pays Jackson
+    * once for ALL change-stream consumers. */
+  def currentStateCached(cacheKey: String, rawEnvelopes: => DataFrame): DataFrame =
+    landed("cdc-state", cacheKey,
+      currentStateFromDecoded(decodedEnvelopesCached(cacheKey, rawEnvelopes)))
 }

@@ -287,12 +287,4 @@ object ThetaSketch {
   def intersectEstimate(a: Column, b: Column): Column =
     ColumnBridge.column(ThetaSetEstimate(
       ColumnBridge.expression(a), ColumnBridge.expression(b), 0))
-
-  def aNotBEstimate(a: Column, b: Column): Column =
-    ColumnBridge.column(ThetaSetEstimate(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), 1))
-
-  def unionEstimate(a: Column, b: Column): Column =
-    ColumnBridge.column(ThetaSetEstimate(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), 2))
 }

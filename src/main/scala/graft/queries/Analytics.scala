@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Batch analytics surface over the landed star schema (SURVEY §2.5-2.7).
   *
   * The reference lands a star schema precisely so "ClickHouse for
@@ -19,9 +17,6 @@ import graft.sources.Tables
   * so results are bitwise-stable across partition orderings and engines.
   */
 object Analytics {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   val all: Seq[Q] = Seq(
 

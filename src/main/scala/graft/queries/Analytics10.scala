@@ -13,9 +13,6 @@ import graft.text.Corpus
   * segmentation. Same engine-portability discipline as packs 1-9. */
 object Analytics10 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q156 weighted-Jaccard threshold and audit slice bound. */
   private val WjTau = 0.5
   private val WjSlice = 200

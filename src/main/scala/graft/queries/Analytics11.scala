@@ -5,16 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Eleventh analytics pack (round 6, session 5): quantile
   * normalization, parallel LTTB-style downsampling, bitemporal SCD2
   * as-of, percent-of-parent rollup, and a data-quality expectation
   * card. Engine-portability discipline as before. */
 object Analytics11 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q162 downsample bucket count. */
   private val LttbBuckets = 60

@@ -6,15 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.StringSimilarity
-import graft.sources.Tables
 
 /** Twelfth analytics pack (round 6, session 5): capped running sums,
   * run-length encoding, Jaro-Winkler fuzzy pairs (native expression),
   * top-k WITH TIES, winsorized statistics. */
 object Analytics12 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q168 fuzzy-pair threshold (at the 6-dp grain) and slice bound. */
   private val JwTau = 0.9

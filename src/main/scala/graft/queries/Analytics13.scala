@@ -12,9 +12,6 @@ import graft.sources.Tables
   * funnel-lag percentiles, and cross-language vocabulary overlap. */
 object Analytics13 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q171 support floors (absolute counts). */
   private val PairSupport = 2
   private val TripleSupport = 2

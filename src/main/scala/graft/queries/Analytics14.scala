@@ -12,9 +12,6 @@ import graft.sources.Tables
   * Pareto concentration curve, and Dunning G² keyness. */
 object Analytics14 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q177 weekly discount factor. */
   private val LtvGamma = 0.95
 

@@ -14,9 +14,6 @@ import graft.sources.Tables
   * cost is the metric, not graph construction. */
 object Analytics15 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q185 core threshold and peel rounds. */
   private val CoreK = 110
   private val CoreRounds = 4

@@ -12,9 +12,6 @@ import graft.sources.Tables
   * size census, PMI collocations, supplier fulfillment latency. */
 object Analytics16 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q189 vocabulary bound (top-N tokens by corpus frequency). */
   private val PmiVocab = 200
   private val PmiMinPairs = 5

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Seventeenth analytics pack (round 6, session 6): rank statistics and
   * SQL-surface widening — Spearman rank correlation, Mann-Whitney U,
   * Theil-Sen robust slope, a window-function gallery
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * expression shape = bit-equal output in both engines.
   */
 object Analytics17 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // Doubled average ranks (2·avgrank = 2·minrank + ties − 1, integral
   // under ties) come from Ranks.withMidrank2 — a census prefix-sum, not

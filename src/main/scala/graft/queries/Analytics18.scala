@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Eighteenth analytics pack (round 6, session 6): label-centroid
   * cosine matrix, Haar wavelet energy spectrum, Poisson-bootstrap
   * confidence intervals, cross-correlation of two event series, and a
@@ -18,9 +16,6 @@ import graft.sources.Tables
   * final expression with the identical parse tree in both engines.
   */
 object Analytics18 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Cumulative Poisson(1) CDF × 10^6, rounded — shared integer
     * thresholds for the bootstrap weight draw (same literals appear in

@@ -13,9 +13,6 @@ import graft.sources.Tables
   * quantization, identical parse trees, exact dyadic fences). */
 object Analytics19 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   val all: Seq[Q] = Seq(
 
     // ---- near-dup distance census: histogram of simhash Hamming

@@ -12,9 +12,6 @@ import graft.sources.Tables
   * `minio_cdc_example/clickhouse_minio.sql:14-26`). */
 object Analytics2 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   val all: Seq[Q] = Seq(
 
     // ---- TPC-H Q4 shape: EXISTS-filtered priority counts -------------

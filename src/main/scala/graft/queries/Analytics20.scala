@@ -11,9 +11,6 @@ import graft.sources.Tables
   * histogram on exact-dyadic octile boundaries. */
 object Analytics20 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   private val EvalK = 5
 
   /** Greedy coverage steps (bounded driver loop, q121 MMR pattern). */

@@ -12,9 +12,6 @@ import graft.sources.Tables
   * of the q89 model artifact). */
 object Analytics21 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Trailing lag in days: each window spans [d - lag, d] = lag+1 days. */
   private val WindowLagDays = 6
   private val DecodeLen = 12

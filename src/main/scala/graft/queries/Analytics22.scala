@@ -14,9 +14,6 @@ import graft.sources.Tables
   * disciplines into a flag per month. */
 object Analytics22 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Per-key-distribution skew report for one keyed relation: the
     * numbers that predict shuffle-partition blowup at 100 TB (top-1
     * key share, max/median ratio). One groupBy per relation, then a

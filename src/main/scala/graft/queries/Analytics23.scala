@@ -21,9 +21,6 @@ import graft.sources.Tables
   * every ranking decision tie-breaks on ids. */
 object Analytics23 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   val all: Seq[Q] = Seq(
 
     // ---- sweep-line concurrency: how many line items are "open"

@@ -23,9 +23,6 @@ import graft.sources.Tables
   * [[PortableHash.coeffs]] coefficient source (q222). */
 object Analytics24 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // Holt-Winters constants as exact binary fractions: the literals
   // parse to identical doubles in both engines (and would anyway, but
   // dyadic values make the contract self-evident).

@@ -23,9 +23,6 @@ import graft.sources.Tables
   * both engines render identically. */
 object Analytics25 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Portable 60-bit md5 value mod `m` (Spark side of DuckDB's
     * `('0x' || substr(md5(x), 1, 15))::BIGINT % m`). */
   private def md5Mod(sref: Column, m: Long): Column =

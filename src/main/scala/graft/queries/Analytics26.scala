@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.dedup.{Dedup, Portable}
-import graft.sources.Tables
 import graft.text.Bpe
 
 /** Twenty-sixth analytics pack (round 6, session 7): train/test
@@ -18,9 +17,6 @@ import graft.text.Bpe
   * Same exactness discipline as packs 17-25: BIGINT until the final
   * division, decimal-grid float sums, md5-portable hash draws. */
 object Analytics26 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Portable 60-bit md5 value mod `m` (see Analytics25.md5Mod). */
   private def md5Mod(sref: Column, m: Long): Column =

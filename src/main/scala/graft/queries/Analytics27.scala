@@ -20,9 +20,6 @@ import graft.sources.Tables
   * estimates, decimal-grid weighted sums for the EWMA closed form. */
 object Analytics27 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   private val WindowLagDays = 6
 
   val all: Seq[Q] = Seq(

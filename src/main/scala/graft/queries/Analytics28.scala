@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Twenty-eighth analytics pack (round 6, session 7): boilerplate
   * prefix census, day-of-week × hour activity heatmap, a correlated-
   * subquery SQL-surface gallery, referential-integrity orphan audit,
@@ -16,9 +14,6 @@ import graft.sources.Tables
   * Exactness discipline unchanged; calendar arithmetic (q244) is pure
   * integer epoch math so no engine calendar function is trusted. */
 object Analytics28 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   val all: Seq[Q] = Seq(
 

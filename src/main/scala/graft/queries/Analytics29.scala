@@ -20,9 +20,6 @@ import graft.sources.Tables
   */
 object Analytics29 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Greedy k-center steps (bounded driver loop, q121 MMR pattern). */
   private val KCenterSteps = 6
 

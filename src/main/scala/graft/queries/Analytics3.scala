@@ -11,9 +11,6 @@ import graft.sources.Tables
   * pattern), and incremental batch-vs-corpus dedup. */
 object Analytics3 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Bigram LM count tables for `dir`'s documents, trained once per
     * (app, dir) via [[graft.sim.IndexCache]] — the LM is an ingest-time
     * artifact (train once, score per query), exactly like the ANN

@@ -18,9 +18,6 @@ import graft.sources.Tables
   * BIGINT cent-seconds to the final division. */
 object Analytics30 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q256 leakage threshold on the rounded-cosine grid. */
   private val LeakCos = 0.98
 

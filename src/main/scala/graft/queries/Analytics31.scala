@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.GraphRank
-import graft.sources.Tables
 import graft.text.TextAnalysis
 
 /** Thirty-first analytics pack (round 6, session 8): ordered event
@@ -18,9 +17,6 @@ import graft.text.TextAnalysis
   * BIGINT micro-units (GraphRank), and every ln result is rounded to
   * the 1e-6 grid before any further arithmetic. */
 object Analytics31 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q264 tokens: ≥ 4 chars (drops function words without a stopword
     * list), vocabulary = words in ≥ 3 distinct docs. */

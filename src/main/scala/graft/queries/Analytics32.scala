@@ -21,9 +21,6 @@ import graft.sources.Tables
   * absolute value first). */
 object Analytics32 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q267 privacy thresholds: a quasi-identifier group is k-anonymous
     * at k=5 and l-diverse at l=3 (Sweeney 2002; Machanavajjhala 2007). */
   private val KAnon = 5

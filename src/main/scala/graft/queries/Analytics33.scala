@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
 import graft.text.Corpus
 
 /** Thirty-third analytics pack (round 6, session 8): locally-dominant
@@ -20,9 +19,6 @@ import graft.text.Corpus
   * ride the Corpus.hashBucket integer mixer shared with the
   * split/sample queries. */
 object Analytics33 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q271 matching rounds (locally-dominant matching converges in a
     * handful of rounds on bounded-degree graphs; 3 is spec-checked to

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.GraphRank
-import graft.sources.Tables
 import graft.text.Corpus
 
 /** Thirty-fourth analytics pack (round 6, session 8): SAX symbolic
@@ -19,9 +18,6 @@ import graft.text.Corpus
   * any cross-row sum (so partial-aggregation order can't perturb
   * them), and breakpoints are exact order statistics. */
 object Analytics34 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q276 PAA segment width (days per segment). */
   private val SaxSeg = 5

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Thirty-fifth analytics pack (round 6, session 8): Hurst exponent
   * by rescaled-range analysis, extreme-value tail diagnostics (mean
   * excess + Hill estimator), Benjamini–Hochberg FDR over exact
@@ -19,9 +17,6 @@ import graft.sources.Tables
   * land on the 1e-6 BIGINT grid before summing, and every seasonal
   * component quantizes before cross-year averaging. */
 object Analytics35 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q281 R/S window sizes (log-spaced; blocks with a short tail are
     * dropped). */

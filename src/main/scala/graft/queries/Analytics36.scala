@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => VF}
-import graft.sources.Tables
 
 /** Thirty-sixth analytics pack (round 6, session 8): binary-
   * segmentation changepoints, k-NN classification evaluation on the
@@ -20,9 +19,6 @@ import graft.sources.Tables
   * iteration floors its center to integer dollars before the next
   * distance pass. */
 object Analytics36 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q286: minimum days on each side of a split. */
   private val MinSeg = 30

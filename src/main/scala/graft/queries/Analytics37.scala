@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Thirty-seventh analytics pack (round 6, session 8): absorbing-
   * Markov conversion probabilities, content-defined chunking (the
   * storage-dedup boundary scheme), exact covariate matching ATT, a
@@ -18,9 +16,6 @@ import graft.sources.Tables
   * matching pairs by rank inside exact covariate cells, and every
   * squared-difference sum is BIGINT. */
 object Analytics37 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q291 horizon (steps of the value iteration). */
   private val MkSteps = 6

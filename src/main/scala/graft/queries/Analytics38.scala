@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Thirty-eighth analytics pack (round 6, session 8): partial
   * autocorrelation (Durbin–Levinson), a fixed-frequency periodogram,
   * the index of dispersion, closed-form isotonic regression (the
@@ -19,9 +17,6 @@ import graft.sources.Tables
   * integers; periodogram trig terms quantize to the 1e-9 grid before
   * the sums (the ln-precedent applied to cos/sin). */
 object Analytics38 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q296 PACF depth. */
   private val PacfLags = 5

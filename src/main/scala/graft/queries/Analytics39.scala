@@ -17,9 +17,6 @@ import graft.sources.Tables
   * and the month-effect ANOVA runs on n²-scaled integer deviations. */
 object Analytics39 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q302 leaderboard size. */
   private val TopN = 10
 

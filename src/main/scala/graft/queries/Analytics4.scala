@@ -16,9 +16,6 @@ import graft.text.{Bpe, Chunking, Corpus, Drift}
   * detection. */
 object Analytics4 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q122's customer–supplier trade graph (edge list + degrees),
     * cached once per (app, dir) — every PageRank iteration rejoins
     * both, so they are ingest-time artifacts like the ANN indexes. */

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Fortieth analytics pack (round 6, session 8): exact Kendall τ-b,
   * a decile gains/lift table, time-weighted concurrency percentiles,
   * a Chapman capture–recapture vocabulary estimate, and the
@@ -15,9 +13,6 @@ import graft.sources.Tables
   * durations, and mark counts are exact BIGINTs; every ratio is one
   * fixed double tree. */
 object Analytics40 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q306 bounded slice (τ is all-pairs; the banded/sampled variant is
     * the scale path, as with q41/q79). */

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Forty-first analytics pack (round 6, session 9): classifier /
   * estimator evaluation statistics — McNemar's paired test, average
   * precision, the Murphy decomposition of the Brier score, the
@@ -19,9 +17,6 @@ import graft.sources.Tables
   * grain), so each final statistic is one fixed double tree in both
   * engines. */
 object Analytics41 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q312/q313 probability grids (1e-9 for rank terms, 1e-6 for
     * forecast probabilities): integer `div` keeps both engines on the

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Forty-second analytics pack (round 6, session 9): parametric
   * inference and experimentation statistics — Welch's t-test with
   * Cohen's d, the one-way ANOVA F, CUPED variance-reduced A/B
@@ -18,9 +16,6 @@ import graft.sources.Tables
   * order-free in both engines — and each final statistic is one fixed
   * double tree over those exact moments. */
 object Analytics42 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   private val D380 = DecimalType(38, 0)
 

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Forty-third analytics pack (round 6, session 9): game-theoretic
   * attribution and robust-fit operators — exact 3-channel Shapley
   * values, a Little's-law throughput audit, the Cochran-Armitage
@@ -20,9 +18,6 @@ import graft.sources.Tables
   * integer masks, µs durations, and cent moments; one double tree per
   * statistic. */
 object Analytics43 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q325: deterministic trial count (two md5-drawn points each). */
   private val RansacTrials = 16

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Forty-fourth analytics pack (round 6, session 9): series and
   * regression diagnostics plus distributional structure — maximum
   * drawdown, the Durbin-Watson autocorrelation test, Cook's-distance
@@ -19,9 +17,6 @@ import graft.sources.Tables
   * √ terms as round-9/round-6 DECIMAL), so no statistic depends on
   * float summation order. */
 object Analytics44 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Monthly revenue series with a 1-based month index — the shared
     * frame for the serial-dependence diagnostics (q326-q335, q406+).

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
 import Analytics44.{monthlySeries, olsFit, MonthlySql, OlsSql}
 
 /** Forty-fifth analytics pack (round 6, session 9): serial-dependence
@@ -19,9 +18,6 @@ import Analytics44.{monthlySeries, olsFit, MonthlySql, OlsSql}
   * iterative reweighting sums grid-rounded DECIMAL terms so the 3
   * fixed iterations produce identical doubles in both engines. */
 object Analytics45 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   private val LbLags = 12
   private val D38 = DecimalType(38, 0)

@@ -20,9 +20,6 @@ import Analytics44.{monthlySeries, olsFit, MonthlySql, OlsSql}
   * phrase scores never depend on float summation order. */
 object Analytics46 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   private val D19 = DecimalType(19, 0)
   private val D38 = DecimalType(38, 0)
 

@@ -18,9 +18,6 @@ import graft.sources.Tables
   * ratios); share×ln terms ride the round-9 DECIMAL grid. */
 object Analytics47 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** The q311 classifier pair: A = price above the corpus floor-mean,
     * B = at least four line items; y = urgent/high priority. */
   private def classifiers(s: SparkSession, dir: String): DataFrame = {

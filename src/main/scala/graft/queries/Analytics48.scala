@@ -19,9 +19,6 @@ import graft.sources.Tables
   * ride the round-9 grid. */
 object Analytics48 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q347 contamination sweep lengths. */
   private val GramSweep = Seq(8, 13, 20)
 

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Forty-ninth analytics pack (round 6, session 9): sampling and
   * experimentation operations — Neyman stratified allocation with
   * largest-remainder rounding, Bloom-filter sizing for the table
@@ -17,9 +15,6 @@ import graft.sources.Tables
   * sums are exact BIGINTs (tie mass carried as doubled counts);
   * survival areas sum grid-rounded DECIMAL terms. */
 object Analytics49 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q353: number of synthetic A/A replications. */
   private val AaSplits = 16

@@ -18,9 +18,6 @@ import graft.text.Relevance
   * so each has an exact DuckDB oracle. */
 object Analytics5 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** q124's lexical leg: the q74 query terms, re-declared here so the
     * pack stays self-contained (same public BM25 operator). */
   private val fuseTerms = Seq("customer", "query", "window", "stream")

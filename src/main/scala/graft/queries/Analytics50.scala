@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fiftieth analytics pack (round 6, session 9): distribution-
   * comparison statistics the suite still lacked — the Wilcoxon
   * signed-rank paired test, mutual information / NMI between two
@@ -19,9 +17,6 @@ import graft.sources.Tables
   * differences as c1·n2 − c2·n1 integer cross-products); share×ln
   * terms ride the round-9 DECIMAL grid. */
 object Analytics50 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** q359/q360 cohorts: urgent vs low order totals in exact cents. */
   private val CohortSql =

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-first analytics pack (round 6, session 9): the k-sample /
   * two-sample nonparametric tests the suite still lacked — the
   * Friedman rank test over complete month×priority blocks, the
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * DECIMAL(38,9) gridded before any cross-row sum so partial-agg
   * order can never perturb the result. */
 object Analytics51 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Urgent-vs-low order totals keyed by exact cent value — the
     * two-cohort by-value table shared by q364/q365 (same shape as the

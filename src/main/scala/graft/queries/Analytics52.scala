@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-second analytics pack (round 6, session 9): forecast
   * evaluation — the metrics a pipeline needs to judge its demand /
   * volume forecasts. MASE of the seasonal-naive forecast, pinball
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * pairwise-|x−y| identity (O(distinct), never an n² join); DM moments
   * are exact Σd / Σd² with one double division at the end. */
 object Analytics52 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Monthly revenue in exact cents, keyed by sortable 'yyyy-MM'. */
   private def monthly(s: SparkSession, dir: String): DataFrame =

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-third analytics pack (round 6, session 9): ordinal
   * association and the remaining rank-test family — Goodman-Kruskal
   * gamma / Somers' D / Kendall tau-c over the priority×price lattice,
@@ -20,9 +18,6 @@ import graft.sources.Tables
   * as a pure integer ratio (the doubled-rank factors cancel); hazard
   * increments round-9 gridded before the cumulative sum. */
 object Analytics53 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Complete month×priority blocks with doubled within-block ranks —
     * shared by q374/q375 (same construct as q361). */

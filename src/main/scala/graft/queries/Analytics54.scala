@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-fourth analytics pack (round 6, session 9): clustering-
   * quality diagnostics over the labeled embedding table — the health
   * checks an embedding-based curation pipeline runs on its cluster
@@ -23,9 +21,6 @@ import graft.sources.Tables
   * n² pair join (the Hopkins probe set is a fixed 50, so its probe×n
   * scan is bounded). */
 object Analytics54 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** (vec_id, label, dim, component) — components as doubles. */
   private def comps(s: SparkSession, dir: String): DataFrame =

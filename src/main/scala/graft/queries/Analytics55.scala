@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-fifth analytics pack (round 6, session 9): survey estimation
   * and sampling theory — the Horvitz-Thompson estimator under unequal
   * power-of-two inclusion probabilities, delete-one-month jackknife
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * grid; the power iteration runs in integer micro-units with
   * truncating division replicated verbatim in both engines. */
 object Analytics55 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Power iteration steps for q384 (kept modest: the chain mixes
     * fast and every extra step is k² work in both engines). */

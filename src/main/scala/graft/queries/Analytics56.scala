@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-sixth analytics pack (round 6, session 9): the two-sample
   * EDF-statistic family over the urgent-vs-low order-total cohorts —
   * Cramér-von Mises, two-sample Anderson-Darling, the Brunner-Munzel
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * the closed-form prefix sum of min(i, N+1−i). Nothing touches an n²
   * pair join and every window runs over the distinct-value support. */
 object Analytics56 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   private val CohortSql =
     """coh AS (

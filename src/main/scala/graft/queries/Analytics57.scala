@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-seventh analytics pack (round 6, session 9): embedding-
   * compression audits — the checks a pipeline runs before switching
   * its vector store to a cheaper representation. Int8 scalar
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * signs draw identical md5 parities in both engines; all ratio /
   * product terms are round-9 gridded before any cross-row sum. */
 object Analytics57 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   private def comps(s: SparkSession, dir: String): DataFrame =
     // NOTE r12: loadParallel was tried here and measured neutral (−1%

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-eighth analytics pack (round 6, session 9): randomness and
   * complexity diagnostics of the revenue series — spectral entropy of
   * the short-period power spectrum, the turning-points randomness
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * O(n²) template self-joins run only on the ≤84-point monthly
   * series — bounded by the calendar, not the data volume. */
 object Analytics58 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Monthly revenue in exact cents with a 1-based rank index. */
   private def monthlyIdx(s: SparkSession, dir: String): DataFrame =

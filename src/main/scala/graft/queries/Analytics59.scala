@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Fifty-ninth analytics pack (round 6, session 9): pricing and
   * marketing econometrics — a within-part fixed-effects log-log price
   * elasticity, RFM quintile segmentation, the discount lift panel,
@@ -19,9 +17,6 @@ import graft.sources.Tables
   * over fully tie-broken (metric, custkey) orders so both engines
   * assign identical quintiles. */
 object Analytics59 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Per-line gridded (ln qty, ln unit price) with the part key. */
   private def logLines(s: SparkSession, dir: String): DataFrame =

@@ -19,9 +19,6 @@ import graft.text.{Corpus, TextAnalysis}
   * DuckDB oracle. */
 object Analytics6 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Sorted-neighborhood window size (pairs per row) and match bound. */
   private val SnWindow = 4
   private val SnMaxDist = 3

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Sixtieth analytics pack (round 6, session 9): method-comparison /
   * agreement statistics on the paired monthly construct (1995 vs 1996
   * revenue by calendar month, q356's pairing) — Deming
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * forms are evaluated in one identical double expression per
   * engine. */
 object Analytics60 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Paired monthly revenue: (mon 1..12, x = 1995 cents, y = 1996). */
   private def paired(s: SparkSession, dir: String): DataFrame = {

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Sixty-first analytics pack (round 6, session 9): the categorical-
   * association completions — Mantel-Haenszel common odds ratio with
   * the CMH test across segment strata, Cochran's Q over related
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * form. Customer modal classes use row_number with full tie-breaks
   * so both engines pick identical modes. */
 object Analytics61 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Modal priority class per customer per year (1995/1996), classes
     * pre-mapped by `mapSql`/`mapCol`; tie-break: higher count first,

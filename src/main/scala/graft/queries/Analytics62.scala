@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Sixty-second analytics pack (round 6, session 9): distribution
   * fitting — Weibull shape/scale by grouped median-rank regression on
   * fulfillment latencies, the Hoaglin Poissonness-plot slope for
@@ -20,9 +18,6 @@ import graft.sources.Tables
   * expressions; k! stays an exact BIGINT (k ≤ 20); weekday indices
   * are aligned across engines (Spark weekday() = isodow − 1). */
 object Analytics62 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   val all: Seq[Q] = Seq(
 

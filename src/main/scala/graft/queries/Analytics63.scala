@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Sixty-third analytics pack (round 6, session 9): change detection
   * and time-series robustness — tabular CUSUM through the prefix-min
   * identity (S_t = P_t − min_{j≤t} P_j, pure windows, no recursion),
@@ -21,9 +19,6 @@ import graft.sources.Tables
   * DECIMAL(38,0); log returns and power terms use the round-9 grid;
   * run-length detection is the exact gaps-and-islands identity. */
 object Analytics63 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Monthly revenue cents with a rank index (shared by q423/q424). */
   private def monthlyIdx(s: SparkSession, dir: String): DataFrame =

@@ -20,9 +20,6 @@ import graft.sources.Tables
   * per ratio. */
 object Analytics64 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   val all: Seq[Q] = Seq(
 
     // ---- truncation-loss panel: for context budgets L ∈ {128, 256,

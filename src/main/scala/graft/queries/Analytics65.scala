@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Sixty-fifth analytics pack (round 6, session 9): external
   * clustering validation — the true embedding labels (U) against the
   * nearest-centroid geometric assignment (V, q380's partial-
@@ -17,9 +15,6 @@ import graft.sources.Tables
   * C(n,2) are exact BIGINTs (ARI and FM are one double division at
   * the end); conditional-entropy terms ride the round-9 ln grid. */
 object Analytics65 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** (vec_id, u = true label, v = nearest-centroid label). */
   private def assignment(s: SparkSession, dir: String): DataFrame = {

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Sixty-sixth analytics pack (round 6, session 9): the warehouse
   * integrity audit — foreign-key orphan counts over every declared
   * relationship, primary-key uniqueness across all ten tables, the
@@ -18,9 +16,6 @@ import graft.sources.Tables
   * Exactness: pure integer counting and exact cent gaps throughout;
   * one division per emitted ratio. */
 object Analytics66 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   val all: Seq[Q] = Seq(
 

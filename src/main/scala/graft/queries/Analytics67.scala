@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Sixty-seventh analytics pack (round 6, session 9): trade-flow
   * analytics over the customer-nation × supplier-nation revenue
   * matrix — a log-log gravity model (closed-form two-regressor OLS),
@@ -20,9 +18,6 @@ import graft.sources.Tables
   * every share are one identical double expression; share deltas are
   * integer cross-products scaled once. */
 object Analytics67 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** (cnat, snat, cents): customer-nation × supplier-nation flows. */
   private def flows(s: SparkSession, dir: String): DataFrame =

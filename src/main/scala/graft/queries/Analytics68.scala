@@ -20,9 +20,6 @@ import graft.sources.Tables
   * use exact integer range CASEs, never floating log2. */
 object Analytics68 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Distinct undirected co-purchase edges (pa < pb).
     *
     * r12: this is the SAME relation as [[Analytics4.triEdgesCached]]

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Sixty-ninth analytics pack (round 6, session 9): shrinkage and
   * empirical Bayes — the James-Stein estimator over segment means,
   * beta-binomial method-of-moments shrinkage of per-customer urgent
@@ -19,9 +17,6 @@ import graft.sources.Tables
   * sums with round-9 gridded per-group terms before cross-group
   * sums; md5 splits are engine-identical. */
 object Analytics69 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Per-customer (n orders, x urgent) counts. */
   private def urgentCounts(s: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Bitmap
-import graft.sources.Tables
 
 /** Seventh analytics pack (round 6, session 5): GROUPING SETS surface,
   * sliding-window distinct actives, robust (median/MAD) scaling,
@@ -14,9 +13,6 @@ import graft.sources.Tables
   * written identically in both engines so IEEE doubles match bit-wise;
   * rounding only at the output grain. */
 object Analytics7 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Sliding-actives window length in days (a 7-day MAU-style gauge). */
   private val SlideDays = 7

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Seventieth analytics pack (round 6, session 9): ML-ops and
   * uncertainty — split-conformal prediction-interval coverage for a
   * per-segment mean model, diagonal-Mahalanobis OOD fractions per
@@ -20,9 +18,6 @@ import graft.sources.Tables
   * differences of gridded distances; every ranking carries a vec_id
   * tie-break so both engines agree. */
 object Analytics70 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Embedding components + per-label gridded mean and variance —
     * cached per (app, dir) like the q279 LPA labels: four queries

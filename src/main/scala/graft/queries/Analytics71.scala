@@ -21,9 +21,6 @@ import graft.sources.Tables
   * (value desc, key) orders in both engines. */
 object Analytics71 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Daily order-line demand in units (exact integer quantities). */
   private def dailyDemand(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")

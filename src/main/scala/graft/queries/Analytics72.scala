@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Seventy-second analytics pack (round 6, session 9): psychometric
   * reliability of the month×segment revenue panel — the five market
   * segments play the role of scale items observed over calendar
@@ -18,9 +16,6 @@ import graft.sources.Tables
   * covariances are DECIMAL(38,0) cross-products of exact BIGINTs
   * divided once inside one identical double expression. */
 object Analytics72 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   private val Segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE",
     "HOUSEHOLD", "MACHINERY")

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Seventy-third analytics pack (round 6, session 9): forensic digit
   * analysis (the Nigrini suite, extending q151's first-digit
   * Benford) — the second-digit Benford test, last-cent-digit
@@ -17,9 +15,6 @@ import graft.sources.Tables
   * sums evaluated identically in both engines; chi-square and MAD
   * are one double expression over exact counts. */
 object Analytics73 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Whole-dollar amounts (>= 10) of order totals, exact. */
   private def dollars(s: SparkSession, dir: String): DataFrame =

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Seventy-fourth analytics pack (round 6, session 9): cross-language
   * corpus profiling — word-bigram conditional entropy per language
   * (sequence complexity), the word-length profile homogeneity
@@ -18,9 +16,6 @@ import graft.sources.Tables
   * entropy and ln-frequency terms ride the round-9 grid; Jaccard
   * overlaps are exact distinct-count ratios. */
 object Analytics74 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** (lang, doc_id, pos, w) word stream. */
   private def words(s: SparkSession, dir: String): DataFrame =

@@ -16,9 +16,6 @@ import graft.sources.Tables
   * discipline (per-term round to 9 dp, DECIMAL accumulation). */
 object Analytics8 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   private val HistBins = 20
   /** Holt smoothing coefficients (level / trend). */
   private val HoltAlpha = 0.3

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Ninth analytics pack (round 6, session 5): statistical monitoring —
   * Benford first-digit audit, two-sample Kolmogorov-Smirnov, Gini
   * concentration, Markov transition matrix, CUSUM changepoint. These
@@ -15,9 +13,6 @@ import graft.sources.Tables
   * money decimal, every double chain the identical expression in both
   * engines, running sums decimal-accumulated before any double cast. */
 object Analytics9 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   val all: Seq[Q] = Seq(
 

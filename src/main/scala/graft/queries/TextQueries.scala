@@ -21,9 +21,6 @@ import graft.text.{Corpus, Pii, Relevance, TextAnalysis}
   */
 object TextQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // stopword list shared with the oracle SQL below
   private val enStop = TextAnalysis.stopwords("en")
   private def enStopSql = enStop.map(w => s"'$w'").mkString(", ")

@@ -14,6 +14,10 @@ package object queries {
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String])
 
+  /** The harness table `n` under `dir`, as a memoized relation. */
+  def t(s: SparkSession, dir: String, n: String): DataFrame =
+    graft.sources.Tables.load(s, dir, n)
+
   /** Exact money math: cast doubles to DECIMAL(12,2) before arithmetic
     * so Spark and DuckDB accumulate identically (decimal addition is
     * associative; double summation is partition-order-dependent).

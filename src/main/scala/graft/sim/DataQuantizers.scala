@@ -34,33 +34,24 @@ object DataQuantizers {
 
   // ---- hyperplane store ----------------------------------------------
 
-  private val planeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
   /** The `count` embedding rows with `vec_id` in
     * `[offset, offset+count)`, as double vectors ordered by id — the
     * LSH hyperplane set. Metadata-sized (≤ 48 × dim doubles), collected
-    * once per (application, cacheKey) and folded into the projection as
-    * literals: bucketing then needs NO join and NO shuffle (same
-    * driver-side-build pattern as the Bloom probe). */
+    * once per (context, cacheKey) into [[IndexCache]] and folded into
+    * the projection as literals: bucketing then needs NO join and NO
+    * shuffle (same driver-side-build pattern as the Bloom probe). */
   def planes(emb: DataFrame, offset: Int, count: Int, cacheKey: String,
-             idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] = {
-    val key = s"${emb.sparkSession.sparkContext.applicationId}:$cacheKey:$offset:$count"
-    val hit = planeCache.get(key)
-    if (hit != null) return hit
-    val rows = emb.filter(col(idCol) >= offset && col(idCol) < offset + count)
-      .select(col(idCol).cast("long"), col(vecCol))
-      .collect()
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-    require(rows.length == count,
-      s"expected $count plane vectors in [$offset, ${offset + count}), got ${rows.length}")
-    planeCache.putIfAbsent(key, rows)
-    rows
-  }
-
-  /** Test hook: drop all cached plane sets. */
-  def clearCache(): Unit = planeCache.clear()
+             idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] =
+    IndexCache.getOrCompute(emb.sparkSession, s"planes:$cacheKey:$offset:$count") {
+      val rows = emb.filter(col(idCol) >= offset && col(idCol) < offset + count)
+        .select(col(idCol).cast("long"), col(vecCol))
+        .collect()
+        .sortBy(_.getLong(0))
+        .map(_.getSeq[Float](1).map(_.toDouble).toArray)
+      require(rows.length == count,
+        s"expected $count plane vectors in [$offset, ${offset + count}), got ${rows.length}")
+      rows
+    }
 
   /** '0'/'1' bucket string for table `t`: sign bits of the rounded
     * cosine against planes t·bits .. t·bits+bits-1, in bit order. */

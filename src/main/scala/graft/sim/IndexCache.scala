@@ -1,40 +1,64 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** JVM-wide cache of materialized ANN index artifacts (IVF centroids
-  * and cell assignments, PQ codebooks and codes) — the deploy-time
-  * split between INDEX BUILD and QUERY: a production system trains at
-  * ingest and probes at query time, exactly as the CDC path decodes at
-  * ingest and reads the landed table. Keyed by the caller's session
-  * (applicationId) + a caller key; entries of stopped contexts are
-  * evicted, and the build closure only runs on a miss.
+/** The one store of ingest-time artifacts — the deploy-time split
+  * between INGEST and QUERY: a production system trains ANN indexes
+  * and LM counts, decodes the CDC topic and resolves table relations
+  * once, and every query reads the landed artifact, exactly as the
+  * reference decodes Debezium at ingest and reads the landed table.
   *
-  * The build runs OUTSIDE the map's lock (plain get / putIfAbsent):
-  * a multi-second training job must not block unrelated keys, and a
-  * build composing other cached artifacts (IVF assignments read the
-  * cached centroids) must not deadlock on a bin lock. Two racing
-  * builders may both train; the loser unpersists its copy. */
+  * Keys are `"<namespace>:<key>"` (`cdc-state:<dir>`, `rel:<dir>:<table>`,
+  * `mh-index:<dir>`, ...). The map holds the artifacts of the one live
+  * SparkContext: Spark runs one context per JVM, so a call that arrives
+  * from a new applicationId empties the map — the old context's blocks
+  * died with it, and its plans must not be served to the new one.
+  *
+  * Builds run OUTSIDE the map's lock (plain get / putIfAbsent, never
+  * `computeIfAbsent`): a multi-second training job must not block
+  * unrelated keys, and a build composing other cached artifacts (the
+  * CDC state reads the decoded layer, which reads the envelopes; IVF
+  * assignments read the cached centroids) re-enters the map. Two racing
+  * builders may both build; the first to land wins. */
 object IndexCache {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Any]()
+  @volatile private var liveApp: String = null
 
-  def getOrBuild(spark: SparkSession, key: String)
-                (build: => DataFrame): DataFrame = {
-    cache.entrySet().removeIf(e => e.getValue.sparkSession.sparkContext.isStopped)
-    val fullKey = s"${spark.sparkContext.applicationId}:$key"
-    val hit = cache.get(fullKey)
-    if (hit != null) return hit
-    val built = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    built.count() // land eagerly: probes must not pay training
-    val prev = cache.putIfAbsent(fullKey, built)
-    if (prev != null) { built.unpersist(); prev } else built
+  /** Memo of `build` under `key` for `spark`'s context. The value is
+    * kept as built: nothing is persisted here. */
+  def getOrCompute[T](spark: SparkSession, key: String)(build: => T): T = {
+    val app = spark.sparkContext.applicationId
+    if (app != liveApp) synchronized {
+      if (app != liveApp) { cache.clear(); liveApp = app }
+    }
+    val hit = cache.get(key)
+    if (hit != null) return hit.asInstanceOf[T]
+    val built = build
+    val prev = cache.putIfAbsent(key, built)
+    if (prev != null) prev.asInstanceOf[T] else built
   }
 
-  /** Drop all cached artifacts, unpersisting live ones (test hook). */
-  def clear(): Unit = {
-    cache.values.forEach { df =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
+  /** [[getOrCompute]] for a landed frame: persisted MEMORY_AND_DISK and
+    * counted eagerly (probes must not pay training); a builder that
+    * loses the race unpersists its copy. */
+  def getOrBuild(spark: SparkSession, key: String)
+                (build: => DataFrame): DataFrame = {
+    var mine: DataFrame = null
+    val landed = getOrCompute(spark, key) {
+      mine = build.persist(StorageLevel.MEMORY_AND_DISK)
+      mine.count()
+      mine
+    }
+    if (mine != null && (mine ne landed)) mine.unpersist()
+    landed
+  }
+
+  /** Drop every artifact, unpersisting the live ones (test hook). */
+  def clear(): Unit = synchronized {
+    cache.values.forEach {
+      case ds: Dataset[_] if !ds.sparkSession.sparkContext.isStopped => ds.unpersist()
+      case _ =>
     }
     cache.clear()
   }

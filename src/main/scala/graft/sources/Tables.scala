@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.sim.IndexCache
+
 /** Parquet star-schema loader for the harness testdata
   * (`/root/testdata/sf*` — see TESTDATA.md).
   *
@@ -16,29 +18,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Relation-metadata cache (the catalog analog): a resolved parquet
+  /** Memoized relation (the catalog analog): a resolved parquet
     * relation snapshots its file listing + merged schema at `read`
     * time; re-resolving both for EVERY query against an immutable
     * table is pure fixed overhead (measured ~50–100 ms/table/query on
-    * the bench set). Keyed by the SESSION (reference identity — a
-    * DataFrame is bound to the SparkSession that resolved it, and
-    * `spark.newSession()` in the same application must not receive
-    * plans bound to a sibling's state), with dead-context eviction as
-    * in CdcSim's cache. The testdata tables are immutable by harness
-    * contract; mutable state (the L2 store) has its own
-    * manifest-versioned reader and never goes through here. A caller
-    * that rewrites a table directory in place must use [[loadFresh]] —
-    * the cached relation keeps the old file-listing snapshot. */
-  private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    relCache.entrySet().removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-    relCache.computeIfAbsent(
-      (spark, dir, name),
-      _ => loadFresh(spark, dir, name))
-  }
+    * the bench set). Kept unpersisted in the artifact store
+    * ([[graft.sim.IndexCache]]) for the live context. The testdata
+    * tables are immutable by harness contract; mutable state (the L2
+    * store) has its own manifest-versioned reader and never goes
+    * through here. A caller that rewrites a table directory in place
+    * must use [[loadFresh]] — the memoized relation keeps the old
+    * file-listing snapshot. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    IndexCache.getOrCompute(spark, s"rel:$dir:$name")(loadFresh(spark, dir, name))
 
   /** Uncached resolve — one file listing + schema read per call. */
   def loadFresh(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -73,19 +65,11 @@ object Tables {
     * shuffle of the table that also CAPPED map parallelism at the core
     * count; now it is a true no-op there — the guard keeps the fix
     * strictly a small-input affordance. */
-  private val scanParts =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
   def loadParallel(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = load(spark, dir, name)
     val cores = spark.sparkContext.defaultParallelism
-    // ADVICE r12: key by applicationId (a string), not the session
-    // object — the old key strongly retained stopped SparkSessions
-    // across the test suite's many sessions. Stale appId entries are a
-    // few bytes each and bounded by #sessions × #tables.
-    val parts: Int = scanParts.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$name",
-      _ => Integer.valueOf(df.rdd.getNumPartitions))
+    val parts = IndexCache.getOrCompute(spark, s"scan-parts:$dir:$name")(
+      df.rdd.getNumPartitions)
     if (parts < cores) df.repartition(cores) else df
   }
 

@@ -146,18 +146,4 @@ class IndexedCorpus(
     }
     admitted
   }
-
-  /** Maintenance: re-derive the postings of every committed batch from
-    * its docs (e.g. after changing `shingleK`); ids and fence are
-    * preserved. */
-  def rebuildIndex(spark: SparkSession): Unit = synchronized {
-    val (last, committed) = readManifest(fs(spark))
-    committed.foreach { b =>
-      postingsOf(spark.read.parquet(docsDir(b)))
-        .repartition(col("__sbucket"))
-        .write.mode("overwrite").partitionBy("__sbucket")
-        .parquet(postingsDir(b))
-    }
-    writeManifest(fs(spark), last, committed)
-  }
 }

@@ -67,10 +67,6 @@ class IndexedVectorCorpus(
   def readVecs(spark: SparkSession): Option[DataFrame] =
     vecsFrom(spark, BatchManifest.read(fs(spark), pointer)._2)
 
-  /** Committed signature index (id, table, bucket, __vbucket). */
-  def readSigs(spark: SparkSession): Option[DataFrame] =
-    sigsFrom(spark, BatchManifest.read(fs(spark), pointer)._2)
-
   // manifest-free forms: admit() reads the pointer once per batch and
   // threads the committed ids through (the single-writer protocol means
   // it cannot change inside the synchronized block — re-reading would

@@ -92,15 +92,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
 
-  /** Rolling-window fingerprint (winnowing-style): minimum xxhash64 over
-    * character 8-gram shingles. Robust to small edits anywhere except
-    * around the minimal shingle. */
-  def rollingFingerprint(text: Column, k: Int = 8): Column = {
-    val n = length(text)
-    val starts = sequence(lit(1), greatest(n - (k - 1), lit(1)))
-    array_min(transform(starts, i => xxhash64(text.substr(i, lit(k)))))
-  }
-
   /** Vocabulary coverage curve — the Zipf statistic behind tokenizer
     * vocab-size choices: the number of distinct tokens needed to cover
     * 90 / 95 / 99% of corpus token mass. One row:

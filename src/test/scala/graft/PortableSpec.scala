@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, Portable}
 import graft.functions.{PortableHash, PortableHashFunctions}
-import graft.sim.DataQuantizers
+import graft.sim.{DataQuantizers, IndexCache}
 import graft.sources.Tables
 
 /** Portable (engine-reproducible) dedup/ANN forms: differential tests
@@ -83,7 +83,7 @@ class PortableSpec extends SparkSpec {
   }
 
   test("data-quantizer LSH top-k: rescored cosines are exact, ranks dense") {
-    DataQuantizers.clearCache()
+    IndexCache.clear()
     val res = DataQuantizers.lshTopK(emb, emb.filter(col("vec_id") < 8),
       k = 5, bits = 4, tables = 8, planeOffset = 100, cacheKey = "spec")
     // every emitted cosine equals the rounded exact cosine of that pair

@@ -9,11 +9,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *     eager artifact work the query triggers)
   *   - `plan`: analysis + optimization + physical planning
   *     (`queryExecution.executedPlan` forced)
-  *   - `exec`: the timed action (`count()`, same as Bench)
+  *   - `exec`: full materialization (a `noop` write computes every
+  *     output column of every row; `count()` would let Catalyst prune
+  *     the output expressions)
   *   - `jobs`: Spark jobs launched by the action window
   *
-  * Prints one line per (query, rep) plus a min-rep summary. Same
-  * session confs as Bench so readings transfer.
+  * Prints one line per (query, rep) plus a min-rep summary. The
+  * session is the library's (`SparkEnv.builder`), as in Verify.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Profile q1,q2"`
   */
@@ -25,25 +27,7 @@ object Profile {
     val names = args.headOption.map(_.split(",").map(_.trim)
       .filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
     require(names.nonEmpty, "usage: runMain graft.Profile <q1,q2,...>")
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "16"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-    // dev-only A/B knob: SPARK_GRAFT_CONF="k=v;k=v" extra session confs
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
+    val spark = SparkEnv.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
     // Per-stage wall vs executor time: wall = completion-submission,
@@ -85,7 +69,7 @@ object Profile {
         df.queryExecution.executedPlan
         val tPlan = ms(t1)
         val t2 = System.nanoTime()
-        df.count()
+        df.write.format("noop").mode("overwrite").save()
         val tExec = ms(t2)
         val jTot = jobCount.get() - j0
         println(f"[profile] $name rep$rep build=$tBuild%.0fms (jobs=$jBuild) " +

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -19,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the sink directory's metadata: folded data lands in a sibling
   * `compactPath` as clustered, target-sized parts (`p{N}/`), and a
   * manifest file records which parts exist and which source files they
-  * supersede. The manifest swap is an atomic rename, exactly like
-  * [[ParquetStateStore]]: readers always see a complete snapshot, and
+  * supersede. The manifest swap is the one atomic rename every store
+  * shares ([[Manifest]]): readers always see a complete snapshot, and
   * the stream keeps appending to the archive throughout.
   *
   * Read path: [[read]] = all live parts ∪ the uncompacted tail (source
@@ -56,34 +54,20 @@ class ArchiveCompactor(
   private def fs(spark: SparkSession): FileSystem =
     new HPath(compactPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Manifest: first line the epoch, then `p <partDir>` and
+  /** `_COMPACTED`: first line the epoch, then `p <partDir>` and
     * `f <supersededSourceFile>` lines. */
-  private case class Manifest(epoch: Int, parts: Seq[String], covered: Set[String])
+  private case class Compacted(epoch: Int, parts: Seq[String], covered: Set[String])
 
-  private def readManifest(hfs: FileSystem): Option[Manifest] =
-    if (hfs.exists(pointer)) {
-      val in = hfs.open(pointer)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-      val epoch = lines.head.trim.toInt
+  private def readManifest(hfs: FileSystem): Option[Compacted] =
+    Manifest.read(hfs, pointer).map { lines =>
       val parts = lines.tail.collect { case l if l.startsWith("p ") => l.drop(2) }
       val covered = lines.tail.collect { case l if l.startsWith("f ") => l.drop(2) }
-      Some(Manifest(epoch, parts, covered.toSet))
-    } else None
-
-  private def writeManifest(hfs: FileSystem, m: Manifest): Unit = {
-    val tmp = new HPath(compactPath, s"_COMPACTED.tmp${m.epoch}")
-    val out = hfs.create(tmp, true)
-    try out.write(
-      (m.epoch.toString +: (m.parts.map("p " + _) ++ m.covered.toSeq.sorted.map("f " + _)))
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (!hfs.rename(tmp, pointer)) {
-      hfs.delete(pointer, false)
-      require(hfs.rename(tmp, pointer), s"manifest swap failed for $compactPath")
+      Compacted(lines.head.trim.toInt, parts, covered.toSet)
     }
-  }
+
+  private def writeManifest(hfs: FileSystem, m: Compacted): Unit =
+    Manifest.swap(hfs, pointer, m.epoch.toString +:
+      (m.parts.map("p " + _) ++ m.covered.toSeq.sorted.map("f " + _)))
 
   private def partDir(name: String) = s"$compactPath/$name"
 
@@ -132,7 +116,7 @@ class ArchiveCompactor(
       else df.sortWithinPartitions(clusterCols.head, clusterCols.tail: _*)
     clustered.write.mode("overwrite").parquet(partDir(s"p$epoch"))
 
-    writeManifest(hfs, Manifest(epoch,
+    writeManifest(hfs, Compacted(epoch,
       prev.fold(Seq.empty[String])(_.parts) :+ s"p$epoch",
       covered ++ small.map(s => new HPath(s._1).getName)))
     small.size
@@ -158,7 +142,7 @@ class ArchiveCompactor(
         if (clusterCols.isEmpty) merged
         else merged.sortWithinPartitions(clusterCols.head, clusterCols.tail: _*)
       clustered.write.mode("overwrite").parquet(partDir(s"p$epoch"))
-      writeManifest(hfs, Manifest(epoch, Seq(s"p$epoch"), m.covered))
+      writeManifest(hfs, Compacted(epoch, Seq(s"p$epoch"), m.covered))
     }
   }
 

@@ -56,11 +56,10 @@ class IndexedCorpus(
   // `__sbucket` as partition columns of one two-level tree
   private def postingsDir(b: Long) = s"$path/postings/batch=$b"
 
-  private def readManifest(fs: FileSystem): (Long, Seq[Long]) =
-    BatchManifest.read(fs, pointer)
+  private def readManifest(fs: FileSystem) = IndexedCorpus.readCommitted(fs, pointer)
 
   private def writeManifest(fs: FileSystem, last: Long, ids: Seq[Long]): Unit =
-    BatchManifest.write(fs, path, pointer, last, ids)
+    IndexedCorpus.writeCommitted(fs, pointer, last, ids)
 
   /** Highest committed batch id (fence), -1 when empty. */
   def lastBatchId(spark: SparkSession): Long = readManifest(fs(spark))._1
@@ -95,15 +94,15 @@ class IndexedCorpus(
   /** Admit one batch: self-dedup, reject near-dups of committed docs
     * (probing only the index buckets the batch touches), then commit
     * the survivors' docs AND postings in one atomic manifest swap.
-    * Returns the admitted rows; a batch id at or below the fence is a
-    * replay and admits nothing. Batch ids must be monotone (the
-    * foreachBatch contract). */
+    * Returns the admitted rows; the fenced batch id is a replay and
+    * admits nothing, and an id behind it throws ([[Manifest.fence]]).
+    * Batch ids must be monotone (the foreachBatch contract). */
   def admit(batch: DataFrame, batchId: Long,
             threshold: Double = 0.5): DataFrame = synchronized {
     val spark = batch.sparkSession
     val hfs = fs(spark)
     val (last, committed) = readManifest(hfs)
-    if (batchId <= last) return batch.limit(0)
+    if (!Manifest.fence(last, batchId, path)) return batch.limit(0)
 
     val pairs = Dedup.jaccardPairs(batch, idCol, textCol, shingleK, threshold)
     val selfDeduped = Dedup.keepOnePerCluster(batch, pairs, idCol)
@@ -146,4 +145,18 @@ class IndexedCorpus(
     }
     admitted
   }
+}
+
+private[streaming] object IndexedCorpus {
+  /** `_COMMITTED`, shared with [[IndexedVectorCorpus]]: the fence on the
+    * first line, then one committed batch id per line. (-1, Nil) when
+    * no pointer exists. */
+  def readCommitted(fs: FileSystem, pointer: HPath): (Long, Seq[Long]) =
+    Manifest.read(fs, pointer).fold((-1L, Seq.empty[Long])) { lines =>
+      (lines.head.trim.toLong, lines.tail.map(_.trim.toLong))
+    }
+
+  def writeCommitted(fs: FileSystem, pointer: HPath, last: Long,
+                     ids: Seq[Long]): Unit =
+    Manifest.swap(fs, pointer, (last +: ids).map(_.toString))
 }

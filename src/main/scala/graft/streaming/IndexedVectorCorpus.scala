@@ -17,7 +17,8 @@ import graft.sim.Similarity
   * is admitted, and each batch probes only the signature partitions its
   * own buckets hash into.
   *
-  * Layout and commit protocol ([[BatchManifest]] discipline):
+  * Layout and commit protocol (the [[IndexedCorpus]] discipline over
+  * one atomically swapped [[Manifest]]):
   *
   *  - `path/vecs/b{N}/`        admitted vectors of batch N
   *  - `path/sigs/batch=N/`     their (id, table, bucket, __vbucket)
@@ -59,13 +60,17 @@ class IndexedVectorCorpus(
   private def vecsDir(b: Long) = s"$path/vecs/b$b"
   private def sigsDir(b: Long) = s"$path/sigs/batch=$b"
 
+  private def readManifest(fs: FileSystem) = IndexedCorpus.readCommitted(fs, pointer)
+
+  private def writeManifest(fs: FileSystem, last: Long, ids: Seq[Long]): Unit =
+    IndexedCorpus.writeCommitted(fs, pointer, last, ids)
+
   /** Highest committed batch id (fence), -1 when empty. */
-  def lastBatchId(spark: SparkSession): Long =
-    BatchManifest.read(fs(spark), pointer)._1
+  def lastBatchId(spark: SparkSession): Long = readManifest(fs(spark))._1
 
   /** Committed vectors. */
   def readVecs(spark: SparkSession): Option[DataFrame] =
-    vecsFrom(spark, BatchManifest.read(fs(spark), pointer)._2)
+    vecsFrom(spark, readManifest(fs(spark))._2)
 
   // manifest-free forms: admit() reads the pointer once per batch and
   // threads the committed ids through (the single-writer protocol means
@@ -96,14 +101,15 @@ class IndexedVectorCorpus(
     * representative), reject near-dups of committed vectors probing
     * only touched index partitions, then commit survivors' vectors AND
     * signatures in one atomic manifest swap. Returns the admitted rows;
-    * a batch id at or below the fence is a replay and admits nothing.
-    * Batch ids must be monotone (the foreachBatch contract). */
+    * the fenced batch id is a replay and admits nothing, and an id
+    * behind it throws ([[Manifest.fence]]). Batch ids must be monotone
+    * (the foreachBatch contract). */
   def admit(batch: DataFrame, batchId: Long,
             threshold: Double = 0.9): DataFrame = synchronized {
     val spark = batch.sparkSession
     val hfs = fs(spark)
-    val (last, committed) = BatchManifest.read(hfs, pointer)
-    if (batchId <= last) return batch.limit(0)
+    val (last, committed) = readManifest(hfs)
+    if (!Manifest.fence(last, batchId, path)) return batch.limit(0)
 
     val pairs = Similarity.nearDupPairs(batch, threshold, bits, tables,
       idCol, vecCol)
@@ -148,10 +154,10 @@ class IndexedVectorCorpus(
         .write.mode("overwrite").partitionBy("__vbucket")
         .parquet(sigsDir(batchId))
       batchSigs.unpersist()
-      BatchManifest.write(hfs, path, pointer, batchId, committed :+ batchId)
+      writeManifest(hfs, batchId, committed :+ batchId)
     } else {
       batchSigs.unpersist()
-      BatchManifest.write(hfs, path, pointer, batchId, committed)
+      writeManifest(hfs, batchId, committed)
     }
     admitted
   }

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Versioned
 
@@ -33,10 +32,10 @@ import graft.operators.Versioned
   * files untouched. Merge I/O is O(dirty-bucket bytes), not O(state):
   * with B buckets a batch touching K distinct buckets reads/writes
   * ~K/B of the state. Readers always see a complete snapshot (the
-  * manifest swap is atomic; old epochs are never mutated). On a
-  * production cluster the same layout maps to Delta/Iceberg `MERGE
-  * INTO` (log instead of manifest file); size `buckets` so one bucket
-  * ≈ a few GB at the target scale.
+  * manifest swap is one atomic rename, see [[Manifest]]; old epochs are
+  * never mutated). On a production cluster the same layout maps to
+  * Delta/Iceberg `MERGE INTO` (log instead of manifest file); size
+  * `buckets` so one bucket ≈ a few GB at the target scale.
   *
   * Schema evolution: ADDITIVE columns evolve in place — a batch
   * carrying a column the stored state lacks (Debezium `ALTER TABLE ADD
@@ -62,68 +61,76 @@ class ParquetStateStore(
   private def fs(spark: SparkSession): FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Manifest: first line the current epoch, then one `bucket epoch`
-    * line per non-empty bucket. */
-  /** Header: `epoch [lastBatchId]` — the optional second token fences
-    * replayed micro-batches ([[mergeOnce]]); it travels in the same
-    * atomically-swapped file as the bucket map, so "state updated" and
-    * "batch recorded" cannot diverge across a crash. */
-  private def readManifestFull(fs: FileSystem): Option[(Int, Long, Map[Int, Int])] =
-    if (fs.exists(pointer)) {
-      val in = fs.open(pointer)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+  /** One parsed `_CURRENT`: header `epoch [lastBatchId]`, then one
+    * `bucket epoch` line per non-empty bucket. The optional batch id
+    * fences replayed micro-batches ([[mergeOnce]]); it travels in the
+    * same atomically-swapped file as the bucket map, so "state updated"
+    * and "batch recorded" cannot diverge across a crash. */
+  private case class Snapshot(epoch: Int, lastBatch: Long, buckets: Map[Int, Int])
+
+  private def snapshot(hfs: FileSystem): Option[Snapshot] =
+    Manifest.read(hfs, pointer).map { lines =>
       val head = lines.head.trim.split("\\s+")
-      val epoch = head(0).toInt
-      val lastBatch = if (head.length > 1) head(1).toLong else -1L
       val map = lines.tail.map { l =>
         val Array(b, e) = l.trim.split("\\s+"); b.toInt -> e.toInt
       }.toMap
-      Some((epoch, lastBatch, map))
-    } else None
-
-  private def readManifest(fs: FileSystem): Option[(Int, Map[Int, Int])] =
-    readManifestFull(fs).map { case (e, _, m) => (e, m) }
-
-  private def writeManifest(fs: FileSystem, epoch: Int, map: Map[Int, Int],
-                            lastBatch: Long = -1L): Unit = {
-    val tmp = new HPath(path, s"_CURRENT.tmp$epoch")
-    val out = fs.create(tmp, true)
-    val head = if (lastBatch >= 0) s"$epoch $lastBatch" else epoch.toString
-    try out.write(
-      (head +: map.toSeq.sorted.map { case (b, e) => s"$b $e" })
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // HDFS/posix rename is atomic; object stores substitute their own
-    // atomic pointer swap here (or a Delta/Iceberg commit).
-    if (!fs.rename(tmp, pointer)) {
-      fs.delete(pointer, false)
-      require(fs.rename(tmp, pointer), s"manifest swap failed for $path")
+      Snapshot(head(0).toInt, if (head.length > 1) head(1).toLong else -1L, map)
     }
-  }
 
   private def bucketDir(epoch: Int, b: Int) = s"$path/e$epoch/__gbucket=$b"
 
   private def bucketCol = pmod(xxhash64(keys.map(col): _*), lit(buckets.toLong))
     .cast("int")
 
+  /** Data schema of each live epoch this instance wrote. Spark records
+    * the written frame's schema in every parquet footer, so a scan
+    * whose buckets all come from one such epoch needs no footer
+    * inference (a Spark job per merge). Epochs written before a restart
+    * or by another instance are not here and are inferred. */
+  @transient private lazy val epochSchemas =
+    scala.collection.concurrent.TrieMap.empty[Int, StructType]
+
+  /** The bucket copies `map` names, tombstones included. `mergeSchema`
+    * surfaces columns added after some buckets were written. */
+  private def scan(spark: SparkSession, map: Map[Int, Int]): DataFrame = {
+    val dirs = map.toSeq.sorted.map { case (b, e) => bucketDir(e, b) }
+    map.values.toSeq.distinct.map(epochSchemas.get).distinct match {
+      case Seq(Some(schema)) => spark.read.schema(schema).parquet(dirs: _*)
+      case _ => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    }
+  }
+
+  /** Write `rows` (carrying `__gbucket`, already hash-partitioned on it
+    * so each bucket is one file) as epoch `epoch`, then swap the
+    * pointer to `kept` plus each of `touched` that came out non-empty —
+    * a bucket whose content is empty (every key deleted) writes no dir
+    * and drops out of the map. */
+  private def commit(hfs: FileSystem, rows: DataFrame, epoch: Int,
+                     kept: Map[Int, Int], touched: Iterable[Int],
+                     lastBatch: Long): Unit = {
+    rows.write.mode("overwrite").partitionBy("__gbucket")
+      .parquet(s"$path/e$epoch")
+    val written = touched.filter(b => hfs.exists(new HPath(bucketDir(epoch, b))))
+    val map = kept ++ written.map(_ -> epoch)
+    val live = map.values.toSet
+    epochSchemas.keys.filterNot(live).foreach(epochSchemas.remove)
+    if (written.nonEmpty)
+      epochSchemas(epoch) = StructType(rows.schema.filterNot(_.name == "__gbucket"))
+    val head = if (lastBatch >= 0) s"$epoch $lastBatch" else epoch.toString
+    Manifest.swap(hfs, pointer,
+      head +: map.toSeq.sorted.map { case (b, e) => s"$b $e" })
+  }
+
   /** Current manifest epoch, resolved against `spark`'s Hadoop conf
     * (matching read/merge/vacuum, which all take the session). */
   def currentVersion(spark: SparkSession): Option[Int] =
-    readManifest(fs(spark)).map(_._1)
-
-  /** Convenience overload using `SparkSession.active`; throws when no
-    * session is active — prefer [[currentVersion(spark*]] in multi-
-    * session JVMs (tests), where "active" may be the wrong session. */
-  def currentVersion: Option[Int] = currentVersion(SparkSession.active)
+    snapshot(fs(spark)).map(_.epoch)
 
   def read(spark: SparkSession): Option[DataFrame] =
-    readManifest(fs(spark)).map { case (_, map) =>
-      val dirs = map.toSeq.sorted.map { case (b, e) => bucketDir(e, b) }
-      if (dirs.isEmpty) spark.emptyDataFrame
+    snapshot(fs(spark)).map { s =>
+      if (s.buckets.isEmpty) spark.emptyDataFrame
       else {
-        val df = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+        val df = scan(spark, s.buckets)
         // tombstones stay in state (late-arrival protection) but are
         // not part of the visible current state
         deletedCol match {
@@ -135,86 +142,78 @@ class ParquetStateStore(
 
   /** Raw state including tombstones — for maintenance/debug. */
   def readWithTombstones(spark: SparkSession): Option[DataFrame] =
-    readManifest(fs(spark)).map { case (_, map) =>
-      val dirs = map.toSeq.sorted.map { case (b, e) => bucketDir(e, b) }
-      if (dirs.isEmpty) spark.emptyDataFrame
-      else spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    snapshot(fs(spark)).map { s =>
+      if (s.buckets.isEmpty) spark.emptyDataFrame else scan(spark, s.buckets)
     }
 
   /** Collapse the union of prior bucket state and batch rows to one
     * row per key — last-writer-wins by `versionCols` here; subclasses
     * override for other MergeTree collapse disciplines (additive merge
-    * in [[SummingStateStore]]). Receives and must preserve the
-    * `__gbucket` column. */
+    * in [[SummingStateStore]]). Receives rows hash-partitioned on
+    * `__gbucket` and must preserve that column; grouping by
+    * `keys :+ "__gbucket"` (the bucket is a function of the keys) keeps
+    * that partitioning, so the write needs no further shuffle. */
   protected def collapse(unioned: DataFrame): DataFrame =
-    Versioned.latestByKey(unioned, keys, versionCols.map(col))
+    Versioned.latestByKey(unioned, keys :+ "__gbucket", versionCols.map(col))
 
   /** Merge a change-batch into the state (idempotent for replayed
     * batches: last-writer-wins is order-insensitive given distinct
     * versions). Rewrites only the buckets the batch touches. */
-  def merge(batch: DataFrame): Unit = synchronized { doMerge(batch, None) }
-
-  /** Fenced merge for NON-idempotent collapse disciplines (summing):
-    * applies the batch only if `batchId` is greater than the last
-    * recorded one, returning whether it was applied. The batch id
-    * rides in the manifest header, so fencing and state share one
-    * atomic swap — a crash cannot record a batch without its data or
-    * vice versa (Delta txn-version fencing, manifest-file rendition).
-    * Requires monotonically increasing batch ids (Structured
-    * Streaming's foreachBatch contract). */
-  def mergeOnce(batch: DataFrame, batchId: Long): Boolean = synchronized {
-    val last = lastBatchId(batch.sparkSession).getOrElse(-1L)
-    if (batchId <= last) false
-    else { doMerge(batch, Some(batchId)); true }
+  def merge(batch: DataFrame): Unit = synchronized {
+    val hfs = fs(batch.sparkSession)
+    doMerge(hfs, snapshot(hfs), batch, None)
   }
 
-  /** Highest batch id recorded by [[mergeOnce]], if any — lets sinks
-    * distinguish an expected replay (id == last) from a fence
-    * regression (id < last: checkpoint reset against a live store). */
-  def lastBatchId(spark: SparkSession): Option[Long] =
-    synchronized(readManifestFull(fs(spark)).map(_._2).filter(_ >= 0))
+  /** Fenced merge for NON-idempotent collapse disciplines (summing):
+    * applies the batch only if `batchId` passes the [[Manifest.fence]]
+    * — true when applied, false for a replay of the last recorded id;
+    * an id behind it throws. The batch id rides in the manifest header,
+    * so fencing and state share one atomic swap — a crash cannot record
+    * a batch without its data or vice versa (Delta txn-version fencing,
+    * manifest-file rendition). Requires monotonically increasing batch
+    * ids (Structured Streaming's foreachBatch contract). */
+  def mergeOnce(batch: DataFrame, batchId: Long): Boolean = synchronized {
+    val hfs = fs(batch.sparkSession)
+    val prev = snapshot(hfs)
+    val fresh = Manifest.fence(prev.fold(-1L)(_.lastBatch), batchId, path)
+    if (fresh) doMerge(hfs, prev, batch, Some(batchId))
+    fresh
+  }
 
-  private def doMerge(batch: DataFrame, batchId: Option[Long]): Unit = {
-    val spark = batch.sparkSession
-    val hfs = fs(spark)
-    val (prevEpoch, prevLast, prevMap) = readManifestFull(hfs)
-      .getOrElse((-1, -1L, Map.empty[Int, Int]))
-    val epoch = prevEpoch + 1
+  /** Highest batch id recorded by [[mergeOnce]], if any. */
+  def lastBatchId(spark: SparkSession): Option[Long] =
+    synchronized(snapshot(fs(spark)).map(_.lastBatch).filter(_ >= 0))
+
+  private def doMerge(hfs: FileSystem, prev: Option[Snapshot],
+                      batch: DataFrame, batchId: Option[Long]): Unit = {
+    val Snapshot(prevEpoch, prevLast, prevMap) =
+      prev.getOrElse(Snapshot(-1, -1L, Map.empty))
 
     val batchB = batch.withColumn("__gbucket", bucketCol)
-    // Metadata-sized driver action: ≤ `buckets` rows (the touched-file
-    // listing a transactional table format would do).
-    val dirty = batchB.select("__gbucket").distinct()
-      .collect().map(_.getInt(0)).toSet
+    // Metadata-sized driver action: ≤ `buckets` rows per partition, one
+    // job without a shuffle (the touched-file listing a transactional
+    // table format would do).
+    val dirty = batchB.select("__gbucket").as(Encoders.scalaInt)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+      .collect().toSet
 
-    val priorDirs = prevMap.collect {
-      case (b, e) if dirty(b) => bucketDir(e, b)
-    }.toSeq.sorted
-    val prior =
-      if (priorDirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(priorDirs: _*)
-        .withColumn("__gbucket", bucketCol))
-
+    val priorMap = prevMap.filter { case (b, _) => dirty(b) }
     // allowMissingColumns: an additive schema change (new column in the
     // batch, or a bucket written before one) null-fills the absent side
-    val unioned = prior match {
-      case Some(p) => p.unionByName(batchB, allowMissingColumns = true)
-      case None => batchB
-    }
+    val unioned =
+      if (priorMap.isEmpty) batchB
+      else scan(batch.sparkSession, priorMap).withColumn("__gbucket", bucketCol)
+        .unionByName(batchB, allowMissingColumns = true)
     // NOTE: tombstones (latest event deleted) are kept, not filtered —
     // dropping them here would let an older update arriving in a later
     // batch resurrect the row. read() hides them.
-    val merged = collapse(unioned)
-    merged
-      .repartition(dirty.size.max(1), col("__gbucket"))
-      .write.mode("overwrite").partitionBy("__gbucket")
-      .parquet(s"$path/e$epoch")
-
-    // A dirty bucket whose merged content is empty (every key deleted)
-    // produces no output dir — drop it from the manifest.
-    val written = dirty.filter(b => hfs.exists(new HPath(bucketDir(epoch, b))))
-    val nextMap = (prevMap -- dirty) ++ written.map(_ -> epoch)
-    writeManifest(hfs, epoch, nextMap, batchId.getOrElse(prevLast))
+    // one task per dirty bucket, but no more tasks than cores: each
+    // write task pays a fixed setup (it deserializes the write job's
+    // Hadoop conf), so extra waves cost more than they parallelize
+    val n = dirty.size.min(batch.sparkSession.sparkContext.defaultParallelism).max(1)
+    val rows = collapse(unioned.repartition(n, col("__gbucket")))
+    commit(hfs, rows, prevEpoch + 1, prevMap -- dirty, dirty,
+      batchId.getOrElse(prevLast))
   }
 
   /** Physically drop tombstones `safeToForget` marks as past the replay
@@ -230,20 +229,13 @@ class ParquetStateStore(
     synchronized {
       deletedCol.foreach { d =>
         val hfs = fs(spark)
-        readManifestFull(hfs).foreach { case (prevEpoch, prevLast, prevMap) =>
-          if (prevMap.nonEmpty) {
-            val epoch = prevEpoch + 1
-            val dirs = prevMap.toSeq.sorted.map { case (b, e) => bucketDir(e, b) }
-            spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-              .where(!(coalesce(col(d), lit(false)) && safeToForget))
-              .withColumn("__gbucket", bucketCol)
-              .repartition(buckets.min(prevMap.size.max(1)), col("__gbucket"))
-              .write.mode("overwrite").partitionBy("__gbucket")
-              .parquet(s"$path/e$epoch")
-            val written = (0 until buckets)
-              .filter(b => hfs.exists(new HPath(bucketDir(epoch, b))))
-            writeManifest(hfs, epoch, written.map(_ -> epoch).toMap, prevLast)
-          }
+        snapshot(hfs).filter(_.buckets.nonEmpty).foreach { s =>
+          val kept = scan(spark, s.buckets)
+            .where(!(coalesce(col(d), lit(false)) && safeToForget))
+            .withColumn("__gbucket", bucketCol)
+            .repartition(buckets.min(s.buckets.size), col("__gbucket"))
+          commit(hfs, kept, s.epoch + 1, Map.empty, s.buckets.keys,
+            s.lastBatch)
         }
       }
     }
@@ -269,9 +261,9 @@ class ParquetStateStore(
     * readers and vacuums. */
   def vacuum(spark: SparkSession, graceMs: Long = 0L): Int = synchronized {
     val hfs = fs(spark)
-    readManifest(hfs) match {
+    snapshot(hfs) match {
       case None => 0
-      case Some((epoch, map)) =>
+      case Some(Snapshot(epoch, _, map)) =>
         // via toSeq: mapping the Map directly would re-key by epoch and
         // collapse every bucket sharing an epoch into one entry
         val live = map.toSeq.map { case (b, e) => (e, b) }.toSet

@@ -97,24 +97,17 @@ object Sinks {
       .start()
 
   /** Shared fenced-merge sink: pre-collapse each micro-batch, apply it
-    * through the batch-id fence, vacuum periodically. A rejected id
-    * equal to the fence is an expected replay; an id BEHIND the fence
-    * means a checkpoint was reset against a live store — silently
-    * dropping those batches would lose data, so fail loudly. */
+    * through the batch-id fence ([[ParquetStateStore.mergeOnce]]: a
+    * replayed id applies nothing, an id BEHIND the fence — a checkpoint
+    * reset against a live store — fails the query), vacuum
+    * periodically. */
   private def fencedUpsert(changes: DataFrame, store: ParquetStateStore,
                            checkpoint: String, trigger: Trigger,
                            vacuumEvery: Int, vacuumGraceMs: Long)
                           (preCollapse: DataFrame => DataFrame): StreamingQuery =
     changes.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = store.mergeOnce(preCollapse(batch), batchId)
-        if (!applied) {
-          val last = store.lastBatchId(batch.sparkSession).getOrElse(-1L)
-          require(batchId == last,
-            s"batch id $batchId is behind the store fence $last for " +
-              s"${store.path} — the checkpoint was reset against a live " +
-              "store; refusing to silently drop batches")
-        }
+        store.mergeOnce(preCollapse(batch), batchId)
         if (vacuumEvery > 0 && batchId % vacuumEvery == vacuumEvery - 1) {
           store.vacuum(batch.sparkSession, vacuumGraceMs)
           ()

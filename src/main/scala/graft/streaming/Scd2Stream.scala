@@ -66,17 +66,9 @@ object Scd2Stream {
     // own events as open intervals and emit spurious zero-length rows).
     // History is written before the state merge, so a fenced id always
     // has its history on disk already. An id BEHIND the fence is a
-    // checkpoint reset against a live store — fail loudly, as in
-    // Sinks.fencedUpsert.
-    state.lastBatchId(spark) match {
-      case Some(last) if batchId == last => return
-      case Some(last) =>
-        require(batchId > last,
-          s"batch id $batchId is behind the store fence $last for " +
-            s"${state.path} — the checkpoint was reset against a live " +
-            "store; refusing to silently drop batches")
-      case None => ()
-    }
+    // checkpoint reset against a live store and throws (Manifest.fence).
+    if (!Manifest.fence(state.lastBatchId(spark).getOrElse(-1L), batchId,
+        state.path)) return
 
     // open intervals for the batch's keys re-enter the timeline as
     // pseudo-events at their valid_from; untouched keys never load (the

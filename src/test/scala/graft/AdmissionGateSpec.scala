@@ -102,6 +102,10 @@ class AdmissionGateSpec extends SparkSpec {
     // replay: the fence rejects the whole batch, corpus unchanged
     assert(c.admit(b2, batchId = 1).count() == 0)
     assert(c.lastBatchId(spark) == 1L)
+    // an id BEHIND the fence is a checkpoint reset: it throws
+    val behind = intercept[IllegalArgumentException](c.admit(b2, batchId = 0))
+    assert(behind.getMessage.contains("behind the store fence"))
+    assert(c.lastBatchId(spark) == 1L)
     val landed = c.readDocs(spark).get.select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(landed == Seq(1L, 3L, 5L), s"corpus holds $landed")

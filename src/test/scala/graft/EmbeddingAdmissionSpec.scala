@@ -130,6 +130,11 @@ class EmbeddingAdmissionSpec extends SparkSpec {
     // the next real batch still lands
     assert(ids(ivc.admit(df(Seq(2L -> b)), 1L)) == Set(2L))
     assert(ids(ivc.readVecs(spark).get) == Set(1L, 2L))
+    // an id BEHIND the fence is a checkpoint reset: it throws
+    val behind = intercept[IllegalArgumentException](
+      ivc.admit(df(Seq(70L -> a)), 0L))
+    assert(behind.getMessage.contains("behind the store fence"))
+    assert(ids(ivc.readVecs(spark).get) == Set(1L, 2L))
     // an all-duplicates batch advances the fence without adding a dir…
     assert(ivc.admit(df(Seq(50L -> a)), 2L).isEmpty)
     assert(ivc.lastBatchId(spark) == 2L)

@@ -203,7 +203,7 @@ class StreamingSpec extends SparkSpec {
     store.merge(b1)  // replayed delivery
     val twice = store.read(spark).get.collect().map(_.toString).sorted
     assert(once.sameElements(twice))
-    assert(store.currentVersion.contains(1))
+    assert(store.currentVersion(spark).contains(1))
   }
 
   test("state store merge rewrites only dirty buckets") {
@@ -232,7 +232,7 @@ class StreamingSpec extends SparkSpec {
     val got = store.read(spark).get
     assert(got.count() == 200)
     assert(got.where($"id" === 1).select("payload").as[String].head() == "p1-updated")
-    assert(store.currentVersion.contains(1))
+    assert(store.currentVersion(spark).contains(1))
   }
 
   test("state store vacuum reclaims superseded buckets, snapshot unchanged") {
@@ -262,8 +262,7 @@ class StreamingSpec extends SparkSpec {
     store.merge(Seq((1, 3L, "final")).toDF("id", "v", "payload"))
     assert(store.read(spark).get.where($"id" === 1)
       .select("payload").as[String].head() == "final")
-    // session-scoped currentVersion overload agrees with the implicit one
-    assert(store.currentVersion(spark) == store.currentVersion)
+    assert(store.currentVersion(spark).contains(2))
   }
 
   test("vacuum grace period protects freshly superseded buckets") {
@@ -323,6 +322,11 @@ class StreamingSpec extends SparkSpec {
     assert(!store.mergeOnce(
       Seq(("a", 3L, 2.5), ("c", 7L, 0.5)).toDF("k", "cnt", "amt"),
       batchId = 1))
+    assert(snap() == Seq(("a", 6L, 17.5), ("b", 1L, 1.0), ("c", 7L, 0.5)))
+    // an id BEHIND the fence is a checkpoint reset: it throws
+    val behind = intercept[IllegalArgumentException](store.mergeOnce(
+      Seq(("a", 3L, 2.5)).toDF("k", "cnt", "amt"), batchId = 0))
+    assert(behind.getMessage.contains("behind the store fence"))
     assert(snap() == Seq(("a", 6L, 17.5), ("b", 1L, 1.0), ("c", 7L, 0.5)))
 
     // streaming form over a file stream, restart included

@@ -32,7 +32,7 @@ python3 dev/duck_bench.py "$SF" "$ORACLE" 2 > $OUT/${TAG}_duck_reps2.json
 
 # Canonical pair artifact (r10 protocol): the duck leg lands at a fixed
 # path that graft.Bench reads on its NEXT run, embedding
-# {spark_total, duck_total, ratio} into BENCH_summary.json / the stdout
+# {spark_total, duck_total, ratio} into bench_out.json / the stdout
 # line — the gate ratio always rides a contemporaneous pair, never a
 # cross-day DuckDB number. The tag records provenance.
 python3 - <<EOF

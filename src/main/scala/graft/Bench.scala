@@ -1,297 +1,192 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-import java.nio.charset.StandardCharsets
 
-/** Benchmark main: runs every `SparkEntry.queries` entry against
-  * `SPARK_GRAFT_SF_DIR` and emits ONE machine-readable JSON metrics line.
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The query timer: times `SparkEntry.queries` against
+  * `SPARK_GRAFT_SF_DIR` (default `/root/testdata/sf0.1`).
   *
-  * Robustness against the driver's bounded stdout capture (measured at
-  * ~2 KB of TAIL: rounds 6–7 printed a ~6.7 KB 480-query line whose head
-  * was cut off → `"parsed": null` in BENCH_r0{6,7}.json): the final
-  * stdout line is now BYTE-BUDGETED to 1.8 KB — headline aggregates plus
-  * as many per-query entries as fit, slowest first, so the weak tail is
-  * exactly what survives capture. The FULL 480-query vector goes to
-  * `SPARK_GRAFT_BENCH_OUT` (default `bench_out.json`), written atomically
-  * (temp file + ATOMIC_MOVE) so a killed run never leaves a half-file.
-  * A third artifact, `SPARK_GRAFT_BENCH_SUMMARY` (default
-  * `BENCH_summary.json`), holds totals + the slowest 32 with full names —
-  * the round-over-round comparison fence that survives any stdout-capture
-  * or line-format change.
+  * Protocol:
+  *  - Session: `SparkEnv.local()`, the library session Verify checks
+  *    and perfbench times. A JVM/codegen warm-up and `SparkEntry.warm`
+  *    run before the first timed query.
+  *  - Action: each rep times build (`fn(spark, sfDir)`, including any
+  *    eager artifact work the query triggers), plan
+  *    (`queryExecution.executedPlan`) and exec (a `noop` write, which
+  *    computes every output column of every row; `.count()` would let
+  *    Catalyst prune the output expressions). `jobs` counts the Spark
+  *    jobs started during the rep, as the listener bus delivers them
+  *    (asynchronously: a start still queued when a rep ends counts
+  *    toward the next one).
+  *  - Reading: the minimum of build + plan + exec over the successful
+  *    ones of `SPARK_GRAFT_REPS` (default 2) reps, run back to back.
+  *    `dev/duck_bench.py`'s DuckDB leg is min-of-2 too, so both engines
+  *    get the same rep count. Back to back because a query's codegen
+  *    and JIT state do not survive 480 other queries between its reps.
+  *  - Failed reps: a rep that throws never enters a minimum. A query
+  *    with no successful rep is left out of `value`, `n`, `queries` and
+  *    the pair, and is named in `failed`.
+  *  - Pair: when `SPARK_GRAFT_PAIR_FILE` (default
+  *    `dev/bench_artifacts/latest_pair.json`, the DuckDB leg
+  *    `dev/rested_ab.sh` writes) exists, its `queries` object (seconds by
+  *    name) is aligned with the readings: `pair` holds both totals over
+  *    the aligned queries, their ratio and the file's age. A file older
+  *    than an hour is marked `"stale": true`, because host throttling
+  *    drifts both engines together only within one session. The file
+  *    is read before the first query, so a malformed one fails the run
+  *    at once.
   *
-  * `SPARK_GRAFT_REPS` (default 2) runs each query N times and records the
-  * minimum of the SUCCESSFUL reps. Default is 2 — the r11 adjudication
-  * showed a REPS=1 official artifact can read 2-3× wrong in either
-  * direction from per-query host stalls (official 3.784× vs the same
-  * HEAD measuring 1.168× under the rested min-of-2 protocol), and the
-  * DuckDB comparison leg (dev/duck_bench.py) is min-of-2 as well, so
-  * min-of-2 is the SYMMETRIC protocol: every query in both engines gets
-  * the same rep count, and no per-query selection decides who gets a
-  * second chance.
+  * Output: one `[bench]` line per rep; `SPARK_GRAFT_BENCH_OUT` (default
+  * `bench_out.json`), moved into place atomically, with `queries`
+  * (seconds by name, the reading) and `phases` (the best rep's
+  * `build_s`, `plan_s`, `exec_s` and `jobs` by name); and, as the last
+  * stdout line, the same JSON without those two maps.
   *
-  * Reps run BACK-TO-BACK per query, deliberately. Pass-interleaving
-  * (whole suite once, then again, min across passes) was tried in r12
-  * to decorrelate multi-second host stalls that can poison both
-  * consecutive reps of one query (q100 read 23.4 s min-of-2 in one
-  * rested leg vs 1.85 s in the adjacent leg) — and measured a uniform
-  * ~1.7× median inflation instead: with 481 queries between a query's
-  * reps, its codegen classes (cache: ~100 entries JVM-wide) and JIT
-  * state are gone by the second rep, so every rep pays warm-up again
-  * (+0.13 s median even on <0.3 s queries). Correlated stalls are the
-  * rarer failure and the RETRY_TOP fence below catches their survivors
-  * (a stall-poisoned min lands among the slowest, gets a post-suite
-  * rep minutes later); the warm-state tax would be paid by every query
-  * every run.
-  *
-  * Fairness of the embedded pair ratio: the ratio is computed from the
-  * uniform min-of-REPS readings ONLY — the asymmetric transient-stall
-  * retry fence (`SPARK_GRAFT_RETRY_TOP`, default 8)
-  * never feeds it, because retrying only the Spark leg's slowest
-  * queries while the DuckDB leg keeps fixed readings would bias the
-  * ratio downward. Retried improvements still reach the per-query
-  * vector and totals, disclosed via "retried". A pair leg older than
-  * one hour is marked `"stale": true` — cross-window host-throttle
-  * drift makes such a ratio unusable as the gate number in either
-  * direction (r11: one artifact rode a 20,639 s-old flattering leg,
-  * another a fogged-Spark/fresh-duck damning one).
-  *
-  * Failure tracking: a rep that throws is recorded as FAILED, not as a
-  * small "valid" wall time — failed reps never enter the min, a query
-  * with zero successful reps is excluded from totals and the pair
-  * alignment, and its name lands in `"failed"` in every artifact.
+  * `SPARK_GRAFT_ONLY=q1,q2` times only the named queries (an unknown
+  * name throws), e.g. with `SPARK_GRAFT_REPS=3` to profile them.
   */
 object Bench {
-  private def fmt(v: Double): String = BigDecimal(v)
-    .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+  private[graft] type Query = (SparkSession, String) => DataFrame
+
+  /** One successful rep, in seconds. */
+  private final case class Rep(build: Double, plan: Double, exec: Double, jobs: Int) {
+    def total: Double = build + plan + exec
+  }
+
+  // A suite in one JVM accumulates dead localCheckpoint blocks,
+  // broadcasts and codegen classes that only the ContextCleaner reaps,
+  // and it reaps on JVM GC, which a big heap defers until late queries
+  // pay 2-4x in GC pauses (r7: q160 2.35 s in-suite vs 0.92 s alone).
+  private val GcEvery = 40
+
+  private val mapper = new ObjectMapper()
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE's per-stage materialization barriers cost ~15% at this
-      // (tiny, local) scale and pay off only on large shuffles — off for
-      // the local bench, on in the library default (SparkEnv).
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // 16 shuffle partitions, not cores (32): measured 26.3s -> 25.0s /
-      // 25.5s across two rested REPS=2 A/Bs at sf0.1 — the sub-second
-      // tail pays per-task overhead on 32 near-empty partitions. Library
-      // default (SparkEnv) keeps cluster-safe sizing; this is bench-box
-      // sizing, like the broadcast-threshold note below.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "16"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // Single-node sizing (the ClickHouse-settings analog, not library
-      // defaults — SparkEnv keeps cluster-safe values):
-      // round-robin repartition pre-sorts rows for retry determinism;
-      // one JVM has no fetch failures, so skip the sort.
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-      // guide §9 / §3.1: allow shuffled-hash join where its size
-      // conditions hold instead of always sort-merge (A/B knob)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      // NOTE measured, not assumed: raising autoBroadcastJoinThreshold
-      // to 64MB made q03/q04 ~1.5× SLOWER here — the single-threaded
-      // broadcast build of a ~150k-row side loses to a 32-way shuffle
-      // join. Dimension tables broadcast fine under the 10MB default.
-      .getOrCreate()
+    val all = SparkEntry.queries
+    val selected = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct)
+      .filter(_.nonEmpty)
+      .fold(all.toSeq)(_.map(name =>
+        name -> all.getOrElse(name, sys.error(s"unknown query $name"))))
+      .sortBy(_._1)
+    val spark = SparkEnv.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup outside any query's timing window
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.warm(spark, sfDir)
-    // dev loop only: comma-separated name filter (driver leaves it
-    // unset); whitespace trimmed, empty value = no filter
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .filter(_.nonEmpty)
-    // Suite GC hygiene: a 480-query single-JVM run accumulates dead
-    // localCheckpoint blocks, broadcasts and codegen classes that only
-    // the ContextCleaner can reap — and it reaps on JVM GC, which a big
-    // heap defers until late-suite queries pay 2-4× in GC pauses
-    // (measured r7: q160 2.35 s in-suite vs 0.92 s isolated at 8g).
-    // A periodic System.gc() every N queries lets the cleaner run while
-    // garbage is still small. Default 40 ≈ once per 6 packs.
-    val gcEvery = sys.env.getOrElse("SPARK_GRAFT_GC_EVERY", "40").toInt
-    var ran = 0
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // One timed attempt: (wall seconds, succeeded). A failed rep's
-    // elapsed time is still returned for disclosure, but flagged so it
-    // can never enter a min or masquerade as a valid reading (the
-    // pre-r12 version swallowed the Throwable and let a fast-failing
-    // query record a winning "time").
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      ((System.nanoTime() - t0) / 1e9, ok)
-    }
-    // Min over successful reps; if every rep failed, carry the fastest
-    // failed elapsed purely for disclosure alongside ok=false.
-    def bestOf(ts: Seq[(Double, Boolean)]): (Double, Boolean) = {
-      val good = ts.collect { case (t, true) => t }
-      if (good.nonEmpty) (good.min, true) else (ts.map(_._1).min, false)
-    }
-    val firstPass: Seq[(String, (Double, Boolean))] =
-      selected.map { case (name, fn) =>
-        val times = (1 to reps).map(_ => timeOnce(fn))
-        ran += 1
-        if (gcEvery > 0 && ran % gcEvery == 0) System.gc()
-        name -> bestOf(times)
-      }
-    // Transient-stall fence: a single host stall can inflate one query
-    // 6–12× (r10: q89 at 11.7 s in the official artifact vs 0.98–1.85 s
-    // in clean same-day legs; a long stall can even span BOTH
-    // back-to-back reps — r12's q100). After the full pass, the
-    // RETRY_TOP slowest queries get ONE extra rep (post-GC, so a
-    // deferred-GC pause can't masquerade as plan cost; minutes after
-    // the original reps, so a stall window that poisoned them has
-    // passed) and report the min. Its improvements are disclosed
-    // ("retried") and NEVER feed the pair ratio below — the ratio
-    // stays on the uniform, duck-leg-symmetric min-of-REPS basis.
-    val retryTop = sys.env.getOrElse("SPARK_GRAFT_RETRY_TOP", "8").toInt
-    val retryNames = firstPass.sortBy(-_._2._1).take(math.max(retryTop, 0))
-      .map(_._1).toSet
-    if (retryNames.nonEmpty) System.gc()
-    val fnByName = selected.toMap
-    val retriedFirst = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val finalPass: Seq[(String, (Double, Boolean))] =
-      firstPass.map { case (name, (t, ok)) =>
-        if (retryNames.contains(name)) {
-          retriedFirst += name -> t
-          name -> bestOf(Seq((t, ok), timeOnce(fnByName(name))))
-        } else name -> (t, ok)
-      }
-    val failed = finalPass.collect { case (n, (_, false)) => n }
-    val results = finalPass.collect { case (n, (t, true)) => n -> t }
-    val retriedExtra =
-      if (retriedFirst.isEmpty) ""
-      else s""""retried":${retriedFirst.toSeq.sortBy(-_._2)
-        .map { case (k, v) => s"\"$k\":${fmt(v)}" }
-        .mkString("{", ",", "}")},"""
-    val failedExtra =
-      if (failed.isEmpty) ""
-      else s""""failed":${failed.sorted.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")},"""
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // Contemporaneous-pair fence (r10 protocol): dev/rested_ab.sh drops
-    // its DuckDB leg at a fixed path; when present, the bench envelope
-    // carries {spark_total, duck_total, ratio} over the ALIGNED query
-    // set, so the gate ratio travels in the same artifact as the run —
-    // BASELINE comparisons stop depending on cross-day DuckDB numbers.
-    // pair_age_sec discloses how stale the duck leg is (host throttling
-    // drifts both engines together only within a session).
-    val pairExtra: String = try {
-      val p = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PAIR_FILE",
-        "dev/bench_artifacts/latest_pair.json"))
-      if (!Files.exists(p)) "" else {
-        val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        // Anchor the scan to the queries object's OWN balanced braces —
-        // not "everything after the key" — so numeric metadata fields
-        // appearing after the queries object (or a query literally named
-        // like one) can never leak into duck_total. The duck leg has no
-        // nested objects inside queries, so brace-balance is exact.
-        val qKey = txt.indexOf("\"queries\"")
-        val open = if (qKey < 0) -1 else txt.indexOf('{', qKey)
-        val body = if (open < 0) "" else {
-          var depth = 0; var i = open; var end = -1
-          while (end < 0 && i < txt.length) {
-            txt.charAt(i) match {
-              case '{' => depth += 1
-              case '}' => depth -= 1; if (depth == 0) end = i
-              case _ => ()
-            }
-            i += 1
-          }
-          if (end < 0) "" else txt.substring(open, end + 1)
-        }
-        val qre = """"([A-Za-z0-9_]+)"\s*:\s*([0-9][0-9.eE+-]*)""".r
-        val duck = qre.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        // Ratio basis: the PRE-retry uniform min-of-REPS readings, and
-        // only queries whose reading is a successful rep — the
-        // asymmetric retry fence and failed-rep wall times must never
-        // shift the gate number (see class scaladoc, fairness note).
-        val sparkMap = firstPass
-          .collect { case (n, (t, true)) => n -> t }.toMap
-        val common = duck.keySet.intersect(sparkMap.keySet)
-        if (common.isEmpty) "" else {
-          val ds = common.toSeq.map(duck).sum
-          val ss = common.toSeq.map(sparkMap).sum
-          val age = (System.currentTimeMillis -
-            Files.getLastModifiedTime(p).toMillis) / 1000
-          // A duck leg from another thermal window is not a gate
-          // reading: host throttle drifts both engines together only
-          // within a session, so flag (don't silently drop) pairs
-          // whose legs are more than an hour apart.
-          val staleF = if (age > 3600) """"stale":true,""" else ""
-          s""""pair":{"spark_total":${fmt(ss)},"duck_total":${fmt(ds)},""" +
-            s""""ratio":${fmt(ss / ds)},"aligned_n":${common.size},""" +
-            staleF + s""""pair_age_sec":$age},"""
-        }
-      }
-    } catch { case _: Throwable => "" }
-    def entries(rs: Seq[(String, Double)], short: Boolean): Seq[String] =
-      rs.map { case (k, v) =>
-        val key = if (short) k.takeWhile(_ != '_') else k
-        s"\"" + key + "\":" + fmt(v)
-      }
-    def envelope(qs: String, extra: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"reps":$reps,$extra"queries":$qs,"sf":"$sfDir"}"""
-    // Full query names, full vector → the file (atomic rename).
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try {
-      val line = envelope(entries(results, short = false).mkString("{", ",", "}"),
-        s""""retry_top":$retryTop,""" + failedExtra + retriedExtra +
-          pairExtra) + "\n"
-      val tmp = Paths.get(out + ".tmp")
-      Files.write(tmp, line.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, Paths.get(out),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } catch { case _: Throwable => () }
-    // Stdout: ONE valid-JSON line ≤ LINE_BUDGET bytes (driver keeps only
-    // a ~2 KB tail of stdout — a longer line loses its head and fails to
-    // parse). Slowest queries first: the entries that matter for grading
-    // are the ones guaranteed to fit.
-    val budget = sys.env.getOrElse("SPARK_GRAFT_LINE_BUDGET", "1800").toInt
-    val slowFirst = results.sortBy(-_._2)
-    // Durable round-over-round fence: a SECOND small artifact with the
-    // totals + the slowest 32 (full names), written atomically next to
-    // bench_out.json. The stdout line depends on the driver's capture
-    // window surviving format changes; this file does not — any future
-    // comparison can read it even if the line parse breaks again.
-    val summaryPath = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_SUMMARY", "BENCH_summary.json")
-    try {
-      val s = envelope(
-        entries(slowFirst.take(32), short = false).mkString("{", ",", "}"),
-        s""""full":"$out","retry_top":$retryTop,""" + failedExtra +
-          retriedExtra + pairExtra) + "\n"
-      val tmp = Paths.get(summaryPath + ".tmp")
-      Files.write(tmp, s.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, Paths.get(summaryPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } catch { case _: Throwable => () }
-    val kept = new scala.collection.mutable.ArrayBuffer[String]
-    var used = envelope("{}",
-      s""""full":"$out","retry_top":$retryTop,""" + failedExtra +
-        pairExtra).length
-    entries(slowFirst, short = true).foreach { e =>
-      if (used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
-    }
+    val envelope = run(spark, sfDir, selected, reps,
+      Paths.get(sys.env.getOrElse("SPARK_GRAFT_PAIR_FILE",
+        "dev/bench_artifacts/latest_pair.json")),
+      Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")))
     spark.stop()
-    println(envelope(kept.mkString("{", ",", "}"),
-      s""""full":"$out","retry_top":$retryTop,""" + failedExtra +
-        pairExtra))
+    println(envelope)
   }
+
+  /** Times `queries` (no warm-up) by the protocol above, writes `out`
+    * and returns the envelope line. */
+  private[graft] def run(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)], reps: Int, pairFile: Path,
+      out: Path): String = {
+    val duck = readPair(pairFile)
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def timeOnce(name: String, rep: Int, fn: Query): Option[Rep] = {
+      val j0 = jobs.get()
+      val t0 = System.nanoTime()
+      try {
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.queryExecution.executedPlan
+        val t2 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val t3 = System.nanoTime()
+        val r = Rep((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
+          jobs.get() - j0)
+        println(f"[bench] $name rep$rep build=${r.build * 1e3}%.0fms " +
+          f"plan=${r.plan * 1e3}%.0fms exec=${r.exec * 1e3}%.0fms " +
+          f"jobs=${r.jobs} total=${r.total * 1e3}%.0fms")
+        Some(r)
+      } catch { case e: Throwable =>
+        println(f"[bench] $name rep$rep failed after " +
+          f"${(System.nanoTime() - t0) / 1e6}%.0fms: $e")
+        None
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val best: Seq[(String, Option[Rep])] =
+      try queries.zipWithIndex.map { case ((name, fn), i) =>
+        val ok = (1 to reps).flatMap(rep => timeOnce(name, rep, fn))
+        if ((i + 1) % GcEvery == 0) System.gc()
+        name -> ok.minByOption(_.total)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    val results = best.collect { case (name, Some(r)) => name -> r }
+    val readings = results.map { case (name, r) => name -> r.total }.toMap
+
+    val envelope = mapper.createObjectNode()
+      .put("metric", "total")
+      .put("value", round(readings.values.sum))
+      .put("unit", "sec")
+      .put("n", results.size)
+      .put("reps", reps)
+    val failed = envelope.putArray("failed")
+    best.collect { case (name, None) => name }.foreach(failed.add)
+    duck.foreach { case (duckSec, mtime) =>
+      val common = duckSec.keySet.intersect(readings.keySet).toSeq
+      val ds = common.map(duckSec).sum
+      if (ds > 0) {
+        val ss = common.map(readings).sum
+        val age = (System.currentTimeMillis - mtime) / 1000
+        val pair = envelope.putObject("pair")
+          .put("spark_total", round(ss))
+          .put("duck_total", round(ds))
+          .put("ratio", round(ss / ds))
+          .put("aligned_n", common.size)
+        if (age > 3600) pair.put("stale", true)
+        pair.put("pair_age_sec", age)
+      }
+    }
+    envelope.put("sf", sfDir)
+
+    val full = envelope.deepCopy()
+    val qs = full.putObject("queries")
+    val phases = full.putObject("phases")
+    results.foreach { case (name, r) =>
+      qs.put(name, round(r.total))
+      phases.putObject(name)
+        .put("build_s", round(r.build))
+        .put("plan_s", round(r.plan))
+        .put("exec_s", round(r.exec))
+        .put("jobs", r.jobs)
+    }
+    val tmp = Paths.get(s"$out.tmp")
+    mapper.writeValue(tmp.toFile, full)
+    Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    mapper.writeValueAsString(envelope)
+  }
+
+  /** The pair file's `queries` object (DuckDB seconds by name) and the
+    * file's mtime in ms; None when the file does not exist. */
+  private def readPair(p: Path): Option[(Map[String, Double], Long)] =
+    if (!Files.exists(p)) None
+    else {
+      val qs = mapper.readTree(p.toFile).get("queries")
+      require(qs != null && qs.isObject, s"$p: no \"queries\" object")
+      val duck = qs.properties().asScala.map { e =>
+        require(e.getValue.isNumber, s"$p: queries.${e.getKey} is not a number")
+        e.getKey -> e.getValue.asDouble
+      }.toMap
+      Some(duck -> Files.getLastModifiedTime(p).toMillis)
+    }
+
+  private def round(v: Double): Double =
+    BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
 }

@@ -3,8 +3,8 @@ package graft
 /** Dev tool: print the formatted physical plan of named queries —
   * the `.explain("formatted")` loop the scale audits read (shuffle
   * count, pushed filters, WholeStageCodegen spans, single-task sorts).
-  * The session is Verify's (`local[$SPARK_GRAFT_CPUS]`, as many shuffle
-  * partitions), so these are the plans Verify checks.
+  * The session is Verify's and Bench's (`SparkEnv.local()`), so these
+  * are the plans Verify checks and Bench times.
   *
   * Usage: `sbt "runMain graft.Explain <sfDir> <q1,q2,...>"`
   */
@@ -16,8 +16,7 @@ object Explain {
       sys.exit(2)
     }
     val Array(sfDir, names) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEnv.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = SparkEnv.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

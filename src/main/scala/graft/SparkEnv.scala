@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Central SparkSession defaults for the engine.
   *
   * Scale notes (targets a 1000-executor cluster even though tests run
-  * `local[32]`):
+  * `local[4]`):
   *  - AQE on: runtime coalescing of shuffle partitions + skew-join
   *    splitting, so the same plan survives a 100× scale-up.
   *  - UTC session timezone: oracle parity (DuckDB is TZ-naive).
@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *    truncation DuckDB applies).
   */
 object SparkEnv {
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -30,4 +30,13 @@ object SparkEnv {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+
+  /** The session the dev mains (`Bench`, `Verify`, `Explain`) run on:
+    * `builder(local[n], n)`, where `n` is `SPARK_GRAFT_CPUS` or, when
+    * that is unset, the JVM's available processors. */
+  def local(): SparkSession.Builder = {
+    val n = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    builder(s"local[$n]", n)
+  }
 }

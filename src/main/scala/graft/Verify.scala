@@ -11,8 +11,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (dev loop)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEnv.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = SparkEnv.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new File(outDir).mkdirs()
     SparkEntry.queries

@@ -36,7 +36,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    name) is aligned with the readings: `pair` holds both totals over
   *    the aligned queries, their ratio and the file's age. A file older
   *    than an hour is marked `"stale": true`, because host throttling
-  *    drifts both engines together only within one session. The file
+  *    drifts both engines together only within one session. A file
+  *    whose `sf` names another scale factor than `SPARK_GRAFT_SF_DIR`
+  *    gives no `pair` (a file without `sf` is aligned as is). The file
   *    is read before the first query, so a malformed one fails the run
   *    at once.
   *
@@ -46,8 +48,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `build_s`, `plan_s`, `exec_s` and `jobs` by name); and, as the last
   * stdout line, the same JSON without those two maps.
   *
-  * `SPARK_GRAFT_ONLY=q1,q2` times only the named queries (an unknown
-  * name throws), e.g. with `SPARK_GRAFT_REPS=3` to profile them.
+  * `SPARK_GRAFT_ONLY=q1,q2` times only the named queries
+  * ([[SparkEntry.select]]: an unknown name throws), e.g. with
+  * `SPARK_GRAFT_REPS=3` to profile them.
   */
 object Bench {
   private[graft] type Query = (SparkSession, String) => DataFrame
@@ -68,12 +71,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val all = SparkEntry.queries
-    val selected = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct)
+    val selected = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.select)
       .filter(_.nonEmpty)
-      .fold(all.toSeq)(_.map(name =>
-        name -> all.getOrElse(name, sys.error(s"unknown query $name"))))
+      .getOrElse(SparkEntry.queries.toSeq)
       .sortBy(_._1)
     val spark = SparkEnv.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -92,7 +92,7 @@ object Bench {
   private[graft] def run(spark: SparkSession, sfDir: String,
       queries: Seq[(String, Query)], reps: Int, pairFile: Path,
       out: Path): String = {
-    val duck = readPair(pairFile)
+    val duck = readPair(pairFile, sfDir)
     val jobs = new AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -174,17 +174,25 @@ object Bench {
   }
 
   /** The pair file's `queries` object (DuckDB seconds by name) and the
-    * file's mtime in ms; None when the file does not exist. */
-  private def readPair(p: Path): Option[(Map[String, Double], Long)] =
+    * file's mtime in ms; None when the file does not exist or its `sf`
+    * is another scale factor than `sfDir`. */
+  private def readPair(p: Path, sfDir: String): Option[(Map[String, Double], Long)] =
     if (!Files.exists(p)) None
     else {
-      val qs = mapper.readTree(p.toFile).get("queries")
+      val root = mapper.readTree(p.toFile)
+      val qs = root.get("queries")
       require(qs != null && qs.isObject, s"$p: no \"queries\" object")
       val duck = qs.properties().asScala.map { e =>
         require(e.getValue.isNumber, s"$p: queries.${e.getKey} is not a number")
         e.getKey -> e.getValue.asDouble
       }.toMap
-      Some(duck -> Files.getLastModifiedTime(p).toMillis)
+      def norm(dir: String) = Paths.get(dir).toAbsolutePath.normalize
+      Option(root.get("sf")).map(_.asText) match {
+        case Some(sf) if norm(sf) != norm(sfDir) =>
+          println(s"[bench] no pair: $p is for sf $sf, this run is $sfDir")
+          None
+        case _ => Some(duck -> Files.getLastModifiedTime(p).toMillis)
+      }
     }
 
   private def round(v: Double): Double =

@@ -16,11 +16,10 @@ object Explain {
       sys.exit(2)
     }
     val Array(sfDir, names) = args.take(2)
+    val selected = SparkEntry.select(names)
     val spark = SparkEnv.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
+    selected.foreach { case (name, fn) =>
       println(s"\n===== $name =====")
       println(fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))

@@ -24,6 +24,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     packs.map(q => q.name -> q.fn).toMap
 
+  /** The queries named in `csv` (comma-separated; blanks and repeats
+    * dropped), in the order given — the one name lookup of `Bench`,
+    * `Verify` and `Explain`. An unknown name throws `unknown query
+    * <name>`, so a typo fails before any session starts. */
+  def select(csv: String): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct.map { name =>
+      name -> all.getOrElse(name, sys.error(s"unknown query $name"))
+    }
+  }
+
   /** Pre-materialize shared inputs (the synthesized CDC "topic") so
     * per-query timings measure the consuming operators, not fixture
     * synthesis. */
@@ -56,12 +67,8 @@ object SparkEntry {
     graft.queries.Analytics3.lmTrigramCached(spark, sfDir, docs)
     graft.queries.Analytics3.lmKneserNeyCached(spark, sfDir, docs)
     // minhash/simhash signature tables: one md5 pass per doc at ingest
-    graft.sim.IndexCache.getOrBuild(spark, s"mh-index:$sfDir") {
-      graft.dedup.Portable.minhashIndex(docs)
-    }
-    graft.sim.IndexCache.getOrBuild(spark, s"sh-index:$sfDir") {
-      graft.dedup.Portable.simhashIndex(docs)
-    }
+    graft.queries.TextQueries.minhashIndexCached(spark, sfDir)
+    graft.queries.TextQueries.simhashIndexCached(spark, sfDir)
     // DSIR bucket model (q98/q99 train half)
     graft.queries.TextQueries.dsirModelCached(spark, sfDir, docs)
     // near-dup components shared by q52 (clusters) and q108 (selection)

@@ -8,15 +8,13 @@ import com.fasterxml.jackson.databind.ObjectMapper
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg: comma-separated query-name filter (dev loop)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // optional 3rd arg: comma-separated query names (dev loop)
+    val selected =
+      if (args.length > 2) SparkEntry.select(args(2)) else SparkEntry.queries.toSeq
     val spark = SparkEnv.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

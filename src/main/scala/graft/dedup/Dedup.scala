@@ -23,9 +23,9 @@ import graft.text.TextAnalysis
   *    O(n²). Only bucket-mates are pair-joined, then exact Jaccard
   *    verifies. This is the only formulation that survives 100 TB;
   *    any direct pairwise compare does not.
-  *  - SimHash: one 64-bit signature per doc; near-dups are signatures
-  *    within small Hamming distance, found by banding the 64 bits into
-  *    chunks (pigeonhole: d bits differing ⇒ some chunk equal).
+  *  - SimHash: one 64-bit signature per doc ([[simhash64]]); the
+  *    banded pair search over signatures (pigeonhole: d bits differing
+  *    ⇒ some chunk equal) is [[Portable.simhashPairs]].
   */
 object Dedup {
 
@@ -243,43 +243,6 @@ object Dedup {
       lit(0L), (acc, v) => acc + v)
   }
 
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** SimHash near-dup pairs within `maxHamming`, found by banding the
-    * 64 bits into `numBands` chunks (pigeonhole guarantee when
-    * numBands > maxHamming). */
-  def simhashPairs(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text", maxHamming: Int = 3,
-                   numBands: Int = 8): DataFrame = {
-    val width = 64 / numBands
-    // persisted: consumed by both sides of the banded self-join
-    val sigs = docs.select(col(idCol).as("id"), simhash64(col(textCol)).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = sigs.withColumn("band", explode(
-      array((0 until numBands).map { b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("sig"), b * width)
-            .bitwiseAND((1L << width) - 1).as("chunk"))
-      }: _*)))
-      .select(col("id"), col("sig"), col("band.band"), col("band.chunk"))
-    val a = banded.select(col("band"), col("chunk"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = banded.select(col("band"), col("chunk"), col("id").as("id_b"), col("sig").as("sig_b"))
-    // hamming filter BEFORE the pair dedup — bit_count is free per
-    // joined row, while deduping the unfiltered candidate set hash-
-    // aggregates K²-inflated collision buckets on duplicate-heavy
-    // corpora (see Portable.simhashPairsFromIndex, same fix)
-    a.join(b, Seq("band", "chunk"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming64(col("sig_a"), col("sig_b")))
-      .where(col("hamming") <= maxHamming)
-      // explicit aggregate, not dropDuplicates: hamming is identical
-      // across a pair's band duplicates, so min() is exact (see
-      // Portable.simhashPairsFromIndex — same Catalyst workaround)
-      .groupBy("id_a", "id_b").agg(min(col("hamming")).as("hamming"))
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
   // ---- near-dup clustering (pairs → components → keep-one) -----------
 
   /** Connected components over an undirected pair list: returns one
@@ -331,144 +294,6 @@ object Dedup {
       s"connectedComponents did not converge in $maxIter rounds — " +
         "a duplicate cluster has a larger diameter; raise maxIter")
     labels
-  }
-
-  /** [[connectedComponents]] with POINTER DOUBLING: each round takes
-    * the min over (a) neighbors' labels — the hook step — and (b) the
-    * label OF the label (`comp(comp(x))`) — the shortcut step, which
-    * halves every remaining label-path. Convergence is O(log diameter)
-    * rounds instead of O(diameter): a 1000-link chain resolves in ~10
-    * rounds, not 1000. Same output contract as the propagation form
-    * (comp = min id of the component); each round costs one extra
-    * self-join of the O(nodes) label table over the propagation form —
-    * worth it exactly when cluster diameters outgrow the round budget
-    * (long duplication chains: boilerplate families, template drift).
-    */
-  def connectedComponentsDoubling(pairs: DataFrame, aCol: String = "id_a",
-                                  bCol: String = "id_b",
-                                  maxIter: Int = 25): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // hook: min over neighbors' current labels
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("comp").as("dcomp")),
-          Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("dcomp")).as("nmin"))
-      val hooked = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-          coalesce(col("nmin") < col("comp"), lit(false)).as("chg"))
-      // shortcut: comp(comp(id)) — jump to the label's own label; the
-      // change flag accumulates across both steps so convergence is one
-      // count over the checkpointed labels, not a join with the old ones
-      val next = hooked
-        .join(hooked.select(col("id").as("comp"), col("comp").as("gcomp")),
-          Seq("comp"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("gcomp"), col("comp"))).as("comp"),
-          (col("chg") ||
-            coalesce(col("gcomp") < col("comp"), lit(false))).as("chg"))
-        .localCheckpoint()
-      changed = next.where(col("chg")).count()
-      labels = next.select(col("id"), col("comp"))
-      iter += 1
-    }
-    edges.unpersist()
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponentsDoubling did not converge in $maxIter rounds")
-    labels
-  }
-
-  /** Connected components by alternating large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14 — public algorithm). Same output contract as
-    * [[connectedComponents]]: one `(id, comp)` row per node, `comp` =
-    * smallest id in the component.
-    *
-    * Why a second implementation: label propagation needs one
-    * join+aggregate round per unit of cluster DIAMETER; star
-    * contraction converges in O(log² n) rounds regardless of diameter
-    * (in practice ~log d). For near-dup clusters (diameter ≲ 4) both
-    * are cheap, but chain-shaped graphs — fuzzy-match chains, entity
-    * resolution — make propagation linear-round while this stays
-    * logarithmic. Each round is two self-contained groupBy/aggregate
-    * passes over the edge list, so the shuffle unit is edges, not
-    * labels ⋈ edges.
-    *
-    *  - large-star: every node points its LARGER neighbors at the
-    *    minimum of its closed neighborhood — long chains fold toward
-    *    their minimum in halving hops;
-    *  - small-star: every node and its ≤-neighbors re-hang on that
-    *    minimum — flattens partial trees into stars.
-    *
-    * Fixpoint when the edge set stops changing; the surviving edges
-    * (child → root) ARE the labels. */
-  def connectedComponentsStar(pairs: DataFrame, aCol: String = "id_a",
-                              bCol: String = "id_b", maxIter: Int = 50): DataFrame = {
-    // canonical parent-pointer edges (big, small), self-loops dropped
-    var edges = pairs
-      .select(greatest(col(aCol), col(bCol)).as("u"),
-        least(col(aCol), col(bCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = edges.select(col("u").as("id"))
-      .unionByName(edges.select(col("v").as("id"))).distinct()
-      .localCheckpoint()
-
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // ---- large-star: u's closed-neighborhood min adopts u's larger
-      // neighbors. Directions: for each undirected edge emit both
-      // orientations, group by center, min over neighbors ∪ self.
-      val both = edges.select(col("u").as("c"), col("v").as("n"))
-        .unionByName(edges.select(col("v").as("c"), col("u").as("n")))
-      val mins = both.groupBy("c")
-        .agg(least(min(col("n")), first(col("c"))).as("m"))
-      val afterLarge = both.join(mins, Seq("c"))
-        .where(col("n") > col("c")) // larger neighbors re-hang on m
-        .select(col("n").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-        .unionByName( // smaller-or-equal neighbors keep their edge
-          both.where(col("n") < col("c"))
-            .select(col("c").as("u"), col("n").as("v")))
-        .distinct()
-
-      // ---- small-star: group by the larger endpoint; that node and
-      // all its smaller neighbors re-hang on the neighborhood min.
-      val byBig = afterLarge // already oriented u (big) → v (small)
-      val smallMin = byBig.groupBy("u").agg(min(col("v")).as("m"))
-      val next = byBig.join(smallMin, Seq("u"))
-        .select(col("u"), col("v"), col("m"))
-        .select(explode(array(
-          struct(col("u").as("a"), col("m").as("b")),
-          struct(col("v").as("a"), col("m").as("b")))).as("e"))
-        .select(greatest(col("e.a"), col("e.b")).as("u"),
-          least(col("e.a"), col("e.b")).as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
-
-      converged = next.exceptAll(edges).isEmpty && edges.exceptAll(next).isEmpty
-      edges = next
-      iter += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds")
-    // stars: every remaining edge is child → component-min root
-    nodes.join(edges.select(col("u").as("id"), col("v").as("comp")),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
   /** Corpus dedup by near-dup clusters: keep the smallest-id member of

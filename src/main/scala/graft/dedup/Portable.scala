@@ -6,20 +6,20 @@ import org.apache.spark.sql.functions._
 import graft.functions.{PortableHash, PortableHashFunctions}
 import graft.text.TextAnalysis
 
-/** Engine-portable MinHash-LSH and SimHash near-dup pairs: the same
-  * banded candidate-generation shapes as [[Dedup.minhashPairs]] /
-  * [[Dedup.simhashPairs]], but built on md5-derived signatures
-  * ([[graft.functions.PortableHash]]) so the EXACT output — candidates
-  * included — is reproducible by an independent SQL engine. The
-  * `...Sql` companions emit that oracle (DuckDB dialect), sharing the
-  * rehash coefficients with the Spark kernels from the single
-  * [[PortableHash.coeffs]] source.
+/** Engine-portable MinHash-LSH and SimHash near-dup pairs, built on
+  * md5-derived signatures ([[graft.functions.PortableHash]]) instead of
+  * the xxhash64 ones of [[Dedup.minhashPairs]] / [[Dedup.simhash64]], so
+  * the EXACT output — candidates included — is reproducible by an
+  * independent SQL engine. The `...Sql` companions emit that oracle
+  * (DuckDB dialect), sharing the rehash coefficients with the Spark
+  * kernels from the single [[PortableHash.coeffs]] source.
   *
   * Why this exists: approximate dedup is only trustworthy when a second
-  * system can re-derive it. The xxhash64 forms in [[Dedup]] stay the
-  * hot path (fastest per shingle); these portable forms are the audited
-  * path and the driver's correctness gate. Scale shape is identical —
-  * O(n·bands) candidate rows through the exchange, never O(n²).
+  * system can re-derive it. [[Dedup.minhashPairs]] stays the xxhash64
+  * MinHash path (fastest per shingle); the SimHash pair search exists
+  * only here. These forms are what the DuckDB oracles check. Scale
+  * shape is banding: O(n·bands) candidate rows through the exchange,
+  * never O(n²).
   */
 object Portable {
 
@@ -148,11 +148,6 @@ object Portable {
 
   // ---- SimHash -------------------------------------------------------
 
-  /** SimHash near-dup pairs within `maxHamming` over the portable
-    * two-word signature: (id_a, id_b, hamming). Banding is pigeonhole-
-    * EXACT (`numBands > maxHamming` ⇒ some band matches), so the output
-    * equals the full O(n²) Hamming pass — which is precisely what the
-    * SQL oracle computes. */
   /** Signature table (id, hi, lo) — the INDEX-BUILD half of
     * [[simhashPairs]] (one md5 per token): an ingest-time artifact,
     * cache it (e.g. via [[graft.sim.IndexCache]]). */
@@ -204,6 +199,11 @@ object Portable {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
+  /** SimHash near-dup pairs within `maxHamming` over the portable
+    * two-word signature: (id_a, id_b, hamming). Banding is pigeonhole-
+    * EXACT (`numBands > maxHamming` ⇒ some band matches), so the output
+    * equals the full O(n²) Hamming pass — which is precisely what the
+    * SQL oracle computes. */
   def simhashPairs(docs: DataFrame, idCol: String = "doc_id",
                    textCol: String = "text", maxHamming: Int = 6,
                    numBands: Int = 8): DataFrame = {

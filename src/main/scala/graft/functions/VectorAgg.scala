@@ -42,12 +42,12 @@ final class VecSumBuffer {
 /** `vector_avg(vec)` — element-wise mean of an embedding column as
   * `array<double>`.
   *
-  * The centroid-update step of k-means (IVF Lloyd refinement). As a
+  * The per-group centroid of a vector column. As a
   * `TypedImperativeAggregate` it participates in partial aggregation:
   * each task reduces its partition to one (sums, count) pair per group
-  * before the shuffle — only cells×tasks narrow rows cross the
+  * before the shuffle — only groups×tasks narrow rows cross the
   * exchange, versus the n·d row explosion of the
-  * posexplode → groupBy(cell, pos) → avg formulation.
+  * posexplode → groupBy(group, pos) → avg formulation.
   */
 case class VectorAvg(
     child: Expression,
@@ -122,60 +122,6 @@ case class VectorAvg(
     copy(child = newChildren(0))
   override def prettyName: String = "vector_avg"
 }
-
-/** `adc_inner_product(codes, lut, k)` — asymmetric-distance scoring for
-  * product-quantized vectors: sum over subspaces j of
-  * `lut[j*k + codes[j]]`. The PQ hot loop — m array lookups per
-  * candidate instead of a d-wide dot product — so it is a native
-  * expression with codegen (reference-object compute call, same shape
-  * as the hash kernels). */
-case class AdcInnerProduct(codes: Expression, lut: Expression, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def left: Expression = codes
-  override def right: Expression = lut
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "adc_inner_product"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    (codes.dataType, lut.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"adc_inner_product expects (array<int>, array<double>), " +
-          s"got (${a.sql}, ${b.sql})")
-    }
-  }
-
-  def compute(c: ArrayData, l: ArrayData): Double = {
-    val m = c.numElements()
-    var acc = 0.0
-    var j = 0
-    while (j < m) {
-      val slot = j * k + c.getInt(j)
-      if (slot >= 0 && slot < l.numElements()) acc += l.getDouble(slot)
-      j += 1
-    }
-    acc
-  }
-
-  override def nullSafeEval(c: Any, l: Any): Any =
-    compute(c.asInstanceOf[ArrayData], l.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("adc", this, getClass.getName)
-    nullSafeCodeGen(ctx, ev, (c, l) => s"${ev.value} = $ref.compute($c, $l);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(codes = newLeft, lut = newRight)
-}
-
 
 /** Running d×d Gram-matrix accumulator over integer vectors.
   *
@@ -308,9 +254,4 @@ object VectorAgg {
   def longGram(vec: Column): Column =
     ColumnBridge.column(
       LongGram(ColumnBridge.expression(vec)).toAggregateExpression())
-
-  /** Column API: ADC score of PQ codes against a query's lookup table. */
-  def adcInnerProduct(codes: Column, lut: Column, k: Int): Column =
-    ColumnBridge.column(AdcInnerProduct(
-      ColumnBridge.expression(codes), ColumnBridge.expression(lut), k))
 }

@@ -85,70 +85,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Raw inner product of two numeric arrays (no normalization) — the
-  * codegen'd kernel behind PQ codebook training/encoding, where it runs
-  * n·m·k times per Lloyd round; the HOF `aggregate(zip_with(...))`
-  * formulation is interpreted per element and measured ~10× slower
-  * there. Same input contract as [[CosineSimilarity]]. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "dot_product"
-
-  private def elemIsDouble(e: Expression): Boolean = e.dataType match {
-    case org.apache.spark.sql.types.ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  private lazy val leftDouble = elemIsDouble(left)
-  private lazy val rightDouble = elemIsDouble(right)
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(e: Expression) = e.dataType match {
-      case org.apache.spark.sql.types.ArrayType(DoubleType, _) => true
-      case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float> or array<double> arguments, " +
-        s"got ${left.dataType.sql} and ${right.dataType.sql}")
-  }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var i = 0
-    while (i < n) {
-      val x = if (leftDouble) a.getDouble(i) else a.getFloat(i).toDouble
-      val y = if (rightDouble) b.getDouble(i) else b.getFloat(i).toDouble
-      dot += x * y; i += 1
-    }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val getA = if (leftDouble) s"$a.getDouble($i)" else s"(double) $a.getFloat($i)"
-      val getB = if (rightDouble) s"$b.getDouble($i)" else s"(double) $b.getFloat($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) { $dot += ($getA) * ($getB); }
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Column-level vector API. */
 object VectorFunctions {
   import org.apache.spark.sql.functions._
@@ -156,11 +92,6 @@ object VectorFunctions {
   /** Codegen'd cosine similarity (native expression above). */
   def cosine(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarity(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Codegen'd raw inner product (no normalization). */
-  def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Higher-order-function formulation — built-ins only; the

@@ -23,11 +23,8 @@ object Analytics19 {
     // ---- O(n²) join, equal by the pigeonhole guarantee ---------------
     Q("q201_hamming_histogram",
       (s, dir) => {
-        val sigs = graft.sim.IndexCache.getOrBuild(s, s"sh-index:$dir") {
-          graft.dedup.Portable.simhashIndex(
-            Tables.loadParallel(s, dir, "documents"))
-        }
-        graft.dedup.Portable.simhashPairsFromIndex(sigs, maxHamming = 6)
+        graft.dedup.Portable.simhashPairsFromIndex(
+            TextQueries.simhashIndexCached(s, dir), maxHamming = 6)
           .groupBy("hamming").agg(count(lit(1)).as("n_pairs"))
           .orderBy("hamming")
       },

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.dedup.{Dedup, Portable}
 import graft.functions.PortableHash
-import graft.sources.Tables
 
 /** Twenty-fourth analytics pack (round 6, session 7): Holt-Winters
   * additive seasonal smoothing, Markov next-event model evaluation,
@@ -246,9 +245,7 @@ object Analytics24 {
     // ---- [[PortableHash.coeffs]] literals. --------------------------
     Q("q222_minhash_source_acc",
       (s, dir) => {
-        val idx = graft.sim.IndexCache.getOrBuild(s, s"mh-index:$dir") {
-          Portable.minhashIndex(Tables.loadParallel(s, dir, "documents"))
-        }
+        val idx = TextQueries.minhashIndexCached(s, dir)
         val srcSig = idx
           .join(t(s, dir, "documents").select(col("doc_id").as("id"),
             col("source")), Seq("id"))

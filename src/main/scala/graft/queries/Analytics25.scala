@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.dedup.{Dedup, Portable}
 import graft.functions.PortableHash
-import graft.sources.Tables
 
 /** Twenty-fifth analytics pack (round 6, session 7): sparse TF-IDF
   * document similarity, Jensen-Shannon divergence between source
@@ -338,9 +337,7 @@ object Analytics25 {
     // ---- running LSH instead of the O(n²) pass at 100 TB. -----------
     Q("q230_lsh_recall",
       (s, dir) => {
-        val idx = graft.sim.IndexCache.getOrBuild(s, s"mh-index:$dir") {
-          Portable.minhashIndex(Tables.loadParallel(s, dir, "documents"))
-        }
+        val idx = TextQueries.minhashIndexCached(s, dir)
         val found = Portable
           .minhashPairsFromIndex(idx.filter(col("id") < 1500), threshold = 0.6)
           .agg(count(lit(1)).as("n_found"))

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.dedup.Portable
 import graft.functions.QuantileSketch
-import graft.sources.Tables
 
 /** Twenty-seventh analytics pack (round 6, session 7): merged DDSketch
   * quantile windows (the quantileState windowed-merge partner of
@@ -120,9 +119,7 @@ object Analytics27 {
     // ---- syndication (cross-source)? --------------------------------
     Q("q239_dup_source_census",
       (s, dir) => {
-        val idx = graft.sim.IndexCache.getOrBuild(s, s"mh-index:$dir") {
-          Portable.minhashIndex(Tables.loadParallel(s, dir, "documents"))
-        }
+        val idx = TextQueries.minhashIndexCached(s, dir)
         val src = t(s, dir, "documents").select(col("doc_id"), col("source"))
         Portable.minhashPairsFromIndex(idx, threshold = 0.6)
           .join(src.select(col("doc_id").as("id_a"),

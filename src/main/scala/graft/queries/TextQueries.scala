@@ -15,9 +15,10 @@ import graft.text.{Corpus, Pii, Relevance, TextAnalysis}
   * engine-portable forms — md5-derived signatures
   * ([[graft.dedup.Portable]]) and data-derived quantizers
   * ([[graft.sim.DataQuantizers]]) whose generated oracle SQL replays
-  * the full pipeline; the xxhash/trained fast paths remain the library
-  * defaults, differentially tested in ScalaTest (`DedupSpec`,
-  * `SimilaritySpec`, `PQSpec`).
+  * the full pipeline. The xxhash MinHash of [[graft.dedup.Dedup]] and
+  * the seeded-RNG banding of [[graft.sim.Similarity]] stay as library
+  * forms, differentially tested in ScalaTest (`DedupSpec`,
+  * `SimilaritySpec`).
   */
 object TextQueries {
 
@@ -152,6 +153,21 @@ object TextQueries {
         targetPred = col("lang") === "en", buckets = 256)
     }
 
+  /** Portable MinHash signature index of `dir`'s documents, built once
+    * per (app, dir) — the ingest-time half shared by q35, q222, q230
+    * and q239. */
+  def minhashIndexCached(s: SparkSession, dir: String): DataFrame =
+    graft.sim.IndexCache.getOrBuild(s, s"mh-index:$dir") {
+      graft.dedup.Portable.minhashIndex(Tables.loadParallel(s, dir, "documents"))
+    }
+
+  /** Portable SimHash signature index of `dir`'s documents — the
+    * ingest-time half shared by q36 and q201. */
+  def simhashIndexCached(s: SparkSession, dir: String): DataFrame =
+    graft.sim.IndexCache.getOrBuild(s, s"sh-index:$dir") {
+      graft.dedup.Portable.simhashIndex(Tables.loadParallel(s, dir, "documents"))
+    }
+
   /** Seed-row PQ index (codebooks + corpus codes) for `dir`'s
     * embeddings — the ingest-time half of q53. */
   def seedPqCached(s: SparkSession, dir: String,
@@ -261,11 +277,8 @@ object TextQueries {
     // ---- Dedup.minhashPairs (DedupSpec) -----------------------------
     Q("q35_minhash_pairs",
       (s, dir) => {
-        val idx = graft.sim.IndexCache.getOrBuild(s, s"mh-index:$dir") {
-          graft.dedup.Portable.minhashIndex(
-            Tables.loadParallel(s, dir, "documents"))
-        }
-        graft.dedup.Portable.minhashPairsFromIndex(idx, threshold = 0.6)
+        graft.dedup.Portable.minhashPairsFromIndex(
+            TextQueries.minhashIndexCached(s, dir), threshold = 0.6)
           .orderBy("id_a", "id_b")
       },
       Some(graft.dedup.Portable.minhashPairsSql(threshold = 0.6))),
@@ -275,11 +288,8 @@ object TextQueries {
     // ---- pass, which the banded Spark output equals by pigeonhole ----
     Q("q36_simhash_pairs",
       (s, dir) => {
-        val sigs = graft.sim.IndexCache.getOrBuild(s, s"sh-index:$dir") {
-          graft.dedup.Portable.simhashIndex(
-            Tables.loadParallel(s, dir, "documents"))
-        }
-        graft.dedup.Portable.simhashPairsFromIndex(sigs, maxHamming = 6)
+        graft.dedup.Portable.simhashPairsFromIndex(
+            TextQueries.simhashIndexCached(s, dir), maxHamming = 6)
           .orderBy("id_a", "id_b")
       },
       Some(graft.dedup.Portable.simhashPairsSql(maxHamming = 6))),
@@ -496,9 +506,8 @@ object TextQueries {
 
     // ---- LSH-bucketed ANN, data-derived hyperplanes (vec_id 100-131):
     // ---- the oracle rebuilds the same planes from the table and
-    // ---- replays bucketing, candidates, rescoring, and ranking.
-    // ---- Seeded-RNG trained variant stays in Similarity.lshTopK
-    // ---- (recall spec in SimilaritySpec) -----------------------------
+    // ---- replays bucketing, candidates, rescoring, and ranking
+    // ---- (recall vs brute force in SimilaritySpec) -------------------
     Q("q42_embed_lsh_topk",
       (s, dir) => {
         // loadParallel: the 32-cosine bucket projection under the
@@ -513,10 +522,7 @@ object TextQueries {
 
     // ---- IVF ANN, seed-row coarse quantizer (vec_id 200-215): cell
     // ---- assignment, probing, and rescoring are all replayed exactly
-    // ---- by the oracle. The Lloyd-trained quantizer (float-iteration-
-    // ---- order dependent, not engine-portable) remains the library
-    // ---- path: Similarity.ivfTopK + IndexCache, recall + k-means
-    // ---- objective asserted in SimilaritySpec ------------------------
+    // ---- by the oracle (recall vs brute force in SimilaritySpec) -----
     Q("q39_embed_ivf_topk",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
@@ -531,8 +537,8 @@ object TextQueries {
     // ---- PQ/ADC ANN, seed-row codebooks (vec_id 240-271) with an
     // ---- integer-quantized LUT: encode/argmin, LUT build, and the
     // ---- BIGINT score sum are exact in any engine — the oracle
-    // ---- replays the whole pipeline. Trained codebooks stay in
-    // ---- ProductQuantization (kernel exactness + recall in PQSpec) ---
+    // ---- replays the whole pipeline (recall vs brute force in
+    // ---- PQSpec) -------------------------------------------------------
     Q("q53_embed_pq_topk",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
@@ -572,7 +578,7 @@ object TextQueries {
         threshold = 0.45, bits = 6, tables = 8, planeOffset = 140))),
 
     // ---- embedding near-dup CLUSTERS: q44's deterministic pair list
-    // ---- closed transitively by pointer-doubling connected components
+    // ---- closed transitively by label-propagation connected components
     // ---- (the step that turns pairs into a deduplicatable partition
     // ---- of the embedding space); oracled by a recursive CTE over the
     // ---- identical edges — the embedding analog of q52 ---------------

@@ -11,10 +11,10 @@ import graft.functions.{VectorFunctions => VF}
   * the embedding table itself (`vec_id` ranges), so an independent SQL
   * engine can rebuild the exact index and reproduce the exact output:
   * each operator here has a `...Sql` companion emitting that oracle
-  * (DuckDB dialect). This is the verifiable counterpart of the
-  * trained-quantizer family in [[Similarity]] / [[ProductQuantization]]
-  * (k-means training is float-iteration-order dependent and cannot be
-  * replayed bit-exactly by another engine; these can).
+  * (DuckDB dialect). These are graft's only approximate top-k forms:
+  * trained quantizers (k-means codebooks) depend on float iteration
+  * order and cannot be replayed bit-exactly by another engine; these
+  * can.
   *
   * Determinism contract shared with the oracles:
   *  - every similarity used in a DECISION (bucket bit, cell argmax,
@@ -26,9 +26,8 @@ import graft.functions.{VectorFunctions => VF}
   *  - multi-term float reductions are built as explicit left-associated
   *    chains, matching the SQL `t1 + t2 + ...` parse.
   *
-  * Scale shape: identical to the trained forms — banding/bucketing
-  * bounds candidates, quantizer tables broadcast, the corpus never
-  * self-joins unbucketed.
+  * Scale shape: banding/bucketing bounds candidates, quantizer tables
+  * broadcast, the corpus never self-joins unbucketed.
   */
 object DataQuantizers {
 
@@ -232,11 +231,6 @@ object DataQuantizers {
 
   // ---- IVF (seed-row coarse quantizer) -------------------------------
 
-  /** IVF top-k with the coarse quantizer = embedding rows
-    * `[centOffset, centOffset+nCentroids)`: assign every vector to its
-    * argmax-rounded-cosine cell (tie → smaller cell id), probe the
-    * `nProbe` best cells per query, rescore exactly.
-    * (query_id, neighbor_id, cosine, rank). */
   /** The coarse-quantizer codebook: (cell, cvec) from the designated
     * id range. Broadcast-small by construction. */
   def ivfCells(emb: DataFrame, nCentroids: Int, centOffset: Int,
@@ -284,6 +278,11 @@ object DataQuantizers {
       .where(col("rank") <= k)
   }
 
+  /** IVF top-k with the coarse quantizer = embedding rows
+    * `[centOffset, centOffset+nCentroids)`: assign every vector to its
+    * argmax-rounded-cosine cell (tie → smaller cell id), probe the
+    * `nProbe` best cells per query, rescore exactly.
+    * (query_id, neighbor_id, cosine, rank). */
   def ivfTopK(emb: DataFrame, queries: DataFrame, k: Int, nCentroids: Int,
               nProbe: Int, centOffset: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

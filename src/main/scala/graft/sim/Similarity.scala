@@ -7,23 +7,18 @@ import graft.functions.{TopKAgg, VectorFunctions => VF}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * LSH per Charikar 2002 (random-hyperplane signatures); IVF per
-  * Jégou et al., "Product quantization for nearest neighbor search"
-  * (2011) — the coarse-quantizer inverted-file stage, without PQ
-  * compression.
+  * [[bruteForceTopK]] is the exact top-k: broadcast the (small) query
+  * set against the corpus, score with the codegen'd cosine expression,
+  * reduce with the bounded-heap [[graft.functions.TopKByScore]]
+  * aggregate. The only shuffle is queries×k rows (partial aggregation
+  * collapses each task to k candidates per query before the exchange)
+  * — the formulation that survives a corpus of 10^10 vectors.
   *
-  * Two paths, per the standard ANN playbook:
-  *  - [[bruteForceTopK]] — exact: broadcast the (small) query set
-  *    against the corpus, score with the codegen'd cosine expression,
-  *    reduce with the bounded-heap [[graft.functions.TopKByScore]]
-  *    aggregate. The only shuffle is queries×k rows (partial
-  *    aggregation collapses each task to k candidates per query before
-  *    the exchange) — this is the formulation that survives a corpus
-  *    of 10^10 vectors.
-  *  - [[lshTopK]] — approximate: random-hyperplane LSH buckets both
-  *    sides with several independent probe tables; only bucket-mates
-  *    are scored. Trades recall for a candidate set ~n/2^bits per
-  *    table.
+  * Near-duplicate pairs ([[nearDupPairs]], [[crossNearDupPairs]]) band
+  * vectors with random-hyperplane LSH (Charikar 2002) and score only
+  * bucket-mates. The approximate top-k forms (LSH, IVF, PQ) are
+  * [[DataQuantizers]]'s, whose quantizers are rows of the table and so
+  * replayable by the SQL oracle.
   */
 object Similarity {
 
@@ -52,161 +47,6 @@ object Similarity {
         col("nb.score").as("cosine"), (col("rank0") + 1).cast("int").as("rank"))
   }
 
-  /** Approximate top-k via random-hyperplane LSH with `tables`
-    * independent hash tables of `bits` bits each. Candidates = pairs
-    * agreeing on all bits in at least one table. Recall rises with
-    * `tables`, candidate count falls with `bits`. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              bits: Int = 8, tables: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              excludeSelf: Boolean = true): DataFrame = {
-    require(tables > 0, s"lshTopK needs at least one hash table, got $tables")
-    // per-table planes: fold the table index into the seed. All tables'
-    // buckets are computed in ONE projection and exploded — a single
-    // corpus scan/shuffle of O(n·tables) narrow rows, not `tables`
-    // unionByName copies (which re-scan and re-partition the corpus per
-    // table). Mirrors Dedup.bands.
-    def bucketedT(df: DataFrame, id: String, vec: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).as(vec))
-        .withColumn("tb", explode(array((0 until tables).map { t =>
-          struct(lit(t).as("table"),
-            VF.hyperplaneSignBits(col(vec), bits, seed = 0x5EEDL + 7919L * t)
-              .as("bucket"))
-        }: _*)))
-        .select(col(id), col(vec), col("tb.table").as("table"),
-          col("tb.bucket").as("bucket"))
-    val c = bucketedT(corpus, "neighbor_id", "c_vec")
-    val q = broadcast(bucketedT(queries, "query_id", "q_vec"))
-    val cand = c.join(q, Seq("table", "bucket"))
-      .where(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
-      .dropDuplicates("query_id", "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        VF.cosine(col("q_vec"), col("c_vec")).as("cosine"))
-    cand.groupBy("query_id")
-      .agg(TopKAgg.topKBy(col("cosine"), col("neighbor_id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("rank0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        col("nb.score").as("cosine"), (col("rank0") + 1).cast("int").as("rank"))
-  }
-
-  /** IVF (inverted-file) approximate top-k: partition the corpus into
-    * `nCentroids` Voronoi cells, search only the `nProbe` cells nearest
-    * each query.
-    *
-    * Initial centroids are a deterministic pseudo-random sample — the C
-    * smallest id-hashes via `orderBy(hash).limit(C)`, which Spark plans
-    * as TakeOrderedAndProject (per-partition top-C, no full sort, no
-    * driver-side count). `lloydIters` rounds of k-means refinement
-    * follow: assign → per-cell [[graft.functions.VectorAvg]] mean
-    * (partial-agg, cells×tasks rows over the exchange) → reassign.
-    * Nothing executes until the caller acts on the returned frame.
-    * Assignment is a broadcast cross-score + arg-max: the corpus
-    * shuffles once on cell id and the per-query search touches
-    * ~nProbe/C of it — the classic IVF recall/cost dial.
-    */
-  /** Nearest-centroid assignment of every corpus vector: one row per
-    * vector with its winning cell, kept vector, and cosine to the
-    * winning centroid. `centroids` must be broadcast-small. */
-  def ivfAssign(corpus: DataFrame, centroids: DataFrame,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol).as("cid"), col(vecCol).as("cvec"))
-      .join(broadcast(centroids))
-      .select(col("cid"), col("cvec"), col("centroid_id"),
-        VF.cosine(col("cvec"), col("centroid_vec")).as("csim"))
-      .groupBy("cid")
-      .agg(max_by(struct(col("centroid_id"), col("csim"), col("cvec")),
-        col("csim")).as("m"))
-      .select(col("cid"), col("m.centroid_id").as("cell"),
-        col("m.csim").as("csim"), col("m.cvec").as("cvec"))
-
-  /** IVF coarse-quantizer codebook: deterministic pseudo-random init
-    * (the C smallest id-hashes — TakeOrderedAndProject, per-partition
-    * top-C, no full sort, no driver-side action) + `lloydIters` rounds
-    * of spherical k-means (assign → per-cell [[graft.functions.VectorAvg]]
-    * mean → reassign; cosine scoring normalizes, so the un-normalized
-    * mean is the spherical update; empty cells drop out). */
-  def ivfCentroids(corpus: DataFrame, nCentroids: Int, lloydIters: Int = 2,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cid"), col(vecCol).as("cvec"))
-    val init = c.orderBy(xxhash64(col("cid")).asc, col("cid").asc).limit(nCentroids)
-      .select(col("cid").cast("long").as("centroid_id"),
-        col("cvec").as("centroid_vec"))
-    (1 to lloydIters).foldLeft(init) { (cents, _) =>
-      ivfAssign(corpus, cents, idCol, vecCol)
-        .groupBy(col("cell"))
-        .agg(graft.functions.VectorAgg.vectorAvg(col("cvec")).as("centroid_vec"))
-        .select(col("cell").as("centroid_id"), col("centroid_vec"))
-    }
-  }
-
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nCentroids: Int = 16, nProbe: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              excludeSelf: Boolean = true, lloydIters: Int = 2): DataFrame = {
-    val centroids =
-      broadcast(ivfCentroids(corpus, nCentroids, lloydIters, idCol, vecCol))
-    val assigned = ivfAssign(corpus, centroids, idCol, vecCol)
-      .select(col("cid").as("neighbor_id"), col("cell"), col("cvec").as("c_vec"))
-    ivfProbe(assigned, centroids, queries, k, nProbe, idCol, vecCol, excludeSelf)
-  }
-
-  /** Probe stage over a prebuilt index — `assigned` is
-    * [[ivfAssign]]'s output renamed (neighbor_id, cell, c_vec),
-    * `centroids` is [[ivfCentroids]]'s output. Splitting build from
-    * probe lets deployments (and the bench, via [[IndexCache]]) train
-    * once at ingest and pay only cell-probing per query. */
-  def ivfProbe(assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
-               k: Int, nProbe: Int = 4,
-               idCol: String = "vec_id", vecCol: String = "embedding",
-               excludeSelf: Boolean = true): DataFrame = {
-    // query → nProbe nearest centroids (centroid table is tiny)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val probes = q.join(broadcast(centroids))
-      .select(col("query_id"), col("q_vec"), col("centroid_id").as("cell"),
-        VF.cosine(col("q_vec"), col("centroid_vec")).as("csim"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAgg.topKBy(col("csim"), col("cell"), nProbe).as("cells"),
-        first(col("q_vec")).as("q_vec"))
-      .select(col("query_id"), col("q_vec"),
-        explode(col("cells")).as("probe"))
-      .select(col("query_id"), col("q_vec"), col("probe.id").as("cell"))
-
-    // search only the probed cells
-    val scored = assigned.join(broadcast(probes), Seq("cell"))
-      .where(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
-      .select(col("query_id"), col("neighbor_id"),
-        VF.cosine(col("q_vec"), col("c_vec")).as("cosine"))
-    scored.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.topKBy(col("cosine"), col("neighbor_id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("rank0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        col("nb.score").as("cosine"), (col("rank0") + 1).cast("int").as("rank"))
-  }
-
-  /** Embedding near-duplicate pairs: cosine above `threshold` among
-    * LSH bucket-mates (the scale path for embedding-based dedup).
-    *
-    * Tuning rule: candidate volume ≈ n²·tables/2^bits, so `bits`
-    * scales with log2(corpus) to hold per-bucket size constant; recall
-    * per table is p_bit^bits with p_bit = 1 - θ/π. For true near-dups
-    * (cosine ≥ 0.9, p_bit ≈ 0.86) 6 bits × 8 tables gives ~0.98
-    * recall; chasing weakly-similar pairs (cosine ≈ 0.45) needs fewer
-    * bits or more tables — that regime is what [[bruteForceTopK]] is
-    * for. */
-  /** Near-duplicate pairs of every `batch` vector against every
-    * `corpus` vector sharing an LSH bucket — the *incremental* shape
-    * (the embedding analog of [[graft.dedup.Dedup.crossJaccardPairs]]):
-    * an arriving micro-batch is checked against the standing corpus
-    * without corpus ever self-joining. The batch side is broadcast
-    * (micro-batches are small by contract); the corpus side is ONE scan
-    * with the bucket ids computed in the projection — no corpus
-    * shuffle, work O(corpus·tables) bucket probes + rescoring only on
-    * bucket-mates. Output: (batch_id, corpus_id, cosine).
-    *
-    * Self-matching is intentional: a vector already in the corpus
-    * matches itself at cosine 1.0, which is what makes replayed
-    * admission batches idempotent (see
-    * [[graft.streaming.EmbeddingAdmission]]). */
   /** The LSH plane-seed schedule: table `t` hashes with seed
     * `BandSeed + BandStride * t`. ONE definition, shared by
     * [[nearDupPairs]], [[crossNearDupPairs]] and
@@ -239,6 +79,20 @@ object Similarity {
     }
   }
 
+  /** Near-duplicate pairs of every `batch` vector against every
+    * `corpus` vector sharing an LSH bucket — the *incremental* shape
+    * (the embedding analog of [[graft.dedup.Dedup.crossJaccardPairs]]):
+    * an arriving micro-batch is checked against the standing corpus
+    * without corpus ever self-joining. The batch side is broadcast
+    * (micro-batches are small by contract); the corpus side is ONE scan
+    * with the bucket ids computed in the projection — no corpus
+    * shuffle, work O(corpus·tables) bucket probes + rescoring only on
+    * bucket-mates. Output: (batch_id, corpus_id, cosine).
+    *
+    * Self-matching is intentional: a vector already in the corpus
+    * matches itself at cosine 1.0, which is what makes replayed
+    * admission batches idempotent (see
+    * [[graft.streaming.EmbeddingAdmission]]). */
   def crossNearDupPairs(corpus: DataFrame, batch: DataFrame,
                         threshold: Double, bits: Int = 6, tables: Int = 4,
                         idCol: String = "vec_id", vecCol: String = "embedding",
@@ -254,6 +108,16 @@ object Similarity {
       .agg(max(col("cosine")).as("cosine"))
   }
 
+  /** Embedding near-duplicate pairs: cosine above `threshold` among
+    * LSH bucket-mates (the scale path for embedding-based dedup).
+    *
+    * Tuning rule: candidate volume ≈ n²·tables/2^bits, so `bits`
+    * scales with log2(corpus) to hold per-bucket size constant; recall
+    * per table is p_bit^bits with p_bit = 1 - θ/π. For true near-dups
+    * (cosine ≥ 0.9, p_bit ≈ 0.86) 6 bits × 8 tables gives ~0.98
+    * recall; chasing weakly-similar pairs (cosine ≈ 0.45) needs fewer
+    * bits or more tables — that regime is what [[bruteForceTopK]] is
+    * for. */
   def nearDupPairs(vectors: DataFrame, threshold: Double,
                    bits: Int = 6, tables: Int = 4,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

@@ -68,10 +68,10 @@ object Sinks {
   /** L2 versioned-upsert sink (S7/W1): per micro-batch, last-writer-wins
     * MERGE of decoded change rows into a [[ParquetStateStore]] — the
     * eager, exact analog of `ReplacingMergeTree(ts_ms) ORDER BY id` +
-    * `FINAL`. The batch is pre-collapsed per key before the merge (the
-    * same map-side reduction Versioned.latestByKey always applies), and
-    * the store rewrites only the hash buckets the batch touches, so
-    * merge I/O is O(dirty-bucket bytes), not O(state). */
+    * `FINAL`. The batch goes to `store.merge` as is: the store unions
+    * it with the prior rows of the hash buckets it touches and collapses
+    * both together with Versioned.latestByKey, rewriting only those
+    * buckets, so merge I/O is O(dirty-bucket bytes), not O(state). */
   def versionedUpsert(changes: DataFrame, store: ParquetStateStore,
                       checkpoint: String,
                       trigger: Trigger = Trigger.AvailableNow(),

